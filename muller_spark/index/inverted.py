@@ -694,6 +694,19 @@ class InvertedIndex:
             return self.spark.createDataFrame([], "id long")
         all_terms = sorted({t for ts in per_qt.values() for t in ts})
         hits = self._lookup_terms(all_terms).select("term", "id")
+        if len(qset) > 63:
+            # bitmask would overflow a long: count covered tokens instead
+            pairs = self.spark.createDataFrame(
+                sorted((t, qt) for qt, ts in per_qt.items() for t in ts),
+                "term string, qt string",
+            )
+            return (
+                hits.join(F.broadcast(pairs), "term")
+                .groupBy("id")
+                .agg(F.countDistinct("qt").alias("nt"))
+                .filter(F.col("nt") == len(qset))
+                .select("id")
+            )
         # AND-of-query-tokens as ONE bit_or aggregate (round 13): each
         # candidate term carries the bitmask of query tokens it covers
         # (a term can sit within tolerance of several), and a document

@@ -30,6 +30,8 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from muller_spark.operators.ledger import StatsLedger
+
 _METHODS: dict[str, Callable[[str], Column]] = {
     "count": F.count,
     "sum": F.sum,
@@ -760,104 +762,6 @@ def cms_frequency_report(
 # incremental aggregate ledger — materialized-view maintenance, LSM-style
 # ---------------------------------------------------------------------------
 
-def _recover_log_swap(live_dir: str) -> None:
-    """Finish a compaction swap interrupted by a crash: if the live log
-    directory is missing but a fully-written ``.compact`` sibling
-    exists (its parquet ``_SUCCESS`` present), promote it.  Consulted
-    by every ledger read/ingest/compact before touching the log, so a
-    crash inside :func:`_swap_log_dir` self-heals on the next
-    operation instead of requiring manual recovery."""
-    import os
-    import shutil
-
-    tmp = live_dir + ".compact"
-    old = live_dir + ".old"
-    if not os.path.isdir(live_dir) and os.path.exists(
-        os.path.join(tmp, "_SUCCESS")
-    ):
-        os.rename(tmp, live_dir)
-    if os.path.isdir(live_dir) and os.path.isdir(old):
-        shutil.rmtree(old)
-
-
-def _swap_log_dir(live_dir: str) -> None:
-    """Promote ``live_dir + '.compact'`` (already fully written) to
-    ``live_dir`` via rename-rename-rmtree: the log is never deleted
-    before its replacement is complete on disk, and the only
-    no-live-dir window is between two renames — which
-    :func:`_recover_log_swap` closes on the next operation."""
-    import os
-    import shutil
-
-    old = live_dir + ".old"
-    shutil.rmtree(old, ignore_errors=True)  # stale from a prior crash
-    os.rename(live_dir, old)
-    os.rename(live_dir + ".compact", live_dir)
-    shutil.rmtree(old)
-
-
-def _writer_lease(path: str, lock):
-    """Opt-in single-writer lease for a ledger mutation (round-12,
-    VERDICT r11 #3).  Every ledger in the family documents single-
-    writer discipline; this turns the documented contract into an
-    enforced one for callers that face scheduler retries (two ingests
-    of the same batch racing = silent double-count for the
-    marker-class ledgers).
-
-    ``lock`` is the per-call opt-in:
-
-    - falsy (default) — no-op, the caller owns serialization;
-    - ``True`` — acquire the ledger's lease with defaults: a second
-      concurrent writer RAISES ``BranchLockedError`` immediately;
-    - a dict — ``BranchLock`` kwargs passthrough (``owner``, ``ttl``,
-      ``timeout`` — give a timeout to QUEUE instead of raising,
-      ``poll_interval``).
-
-    The lease file lives at ``<ledger>/locks/writer.lock`` — same
-    atomic-exclusive-create + stale-lease-takeover machinery as branch
-    commits (``versioning/locks.py``), so a crashed writer's lease is
-    reclaimed after its TTL instead of wedging the ledger."""
-    import contextlib
-
-    if not lock:
-        return contextlib.nullcontext()
-    from muller_spark.versioning.locks import BranchLock
-
-    kwargs = dict(lock) if isinstance(lock, dict) else {}
-    return BranchLock(path, "writer", **kwargs)
-
-
-def _manifest_folded_batches(path: str, log_name: str) -> None:
-    """Record a ``landed`` manifest entry for every COMMITTED streaming
-    batch subdir (``<log>/ingest_run=*/ingest_batch=*`` with its
-    parquet ``_SUCCESS``) that lacks one, before compaction folds the
-    subdirs into flat files and drops their markers.
-
-    Closes the last double-count window of the marker crash class: a
-    stream that crashed between its partial commit and its manifest
-    touch, followed by compaction BEFORE the restart, used to leave the
-    restarted batch with neither marker nor manifest — so the handler
-    rewrote (double-counted) it.  Manifesting at fold time is always
-    sound: a committed subdir's rows are in the log (subdir or folded
-    form) from this point on, so "do not rewrite" is exactly right,
-    and writing the manifest BEFORE the fold keeps a crashed compaction
-    harmless (the subdir still exists and still counts once)."""
-    import glob
-    import os
-
-    landed_dir = os.path.join(path, "landed")
-    pattern = os.path.join(
-        path, log_name, "ingest_run=*", "ingest_batch=*", "_SUCCESS"
-    )
-    for marker in glob.glob(pattern):
-        bdir = os.path.dirname(marker)
-        batch = os.path.basename(bdir).split("=", 1)[1]
-        run = os.path.basename(os.path.dirname(bdir)).split("=", 1)[1]
-        os.makedirs(landed_dir, exist_ok=True)
-        entry = os.path.join(landed_dir, f"{run}_{batch}")
-        if not os.path.exists(entry):
-            open(entry, "a").close()
-
 def _agg_partials(df: DataFrame, key_cols: "Sequence[str]", value_col: str) -> DataFrame:
     """One partial-aggregate row per key for a batch: the mergeable
     tuple (cnt, nn, sum, sumsq, min, max).  Sums accumulate as
@@ -889,6 +793,27 @@ def _agg_partials(df: DataFrame, key_cols: "Sequence[str]", value_col: str) -> D
     )
 
 
+def _agg_fold(log: DataFrame, keys: "list[str]", meta) -> DataFrame:
+    """Partial rows merged per key, in the partial-log schema (the
+    decimal sums re-cast to the log's type after the widening fold)."""
+    return log.groupBy(*keys).agg(
+        F.sum("cnt").alias("cnt"),
+        F.sum("nn").alias("nn"),
+        F.sum("sum_v").cast("decimal(38,6)").alias("sum_v"),
+        F.sum("sumsq_v").cast("decimal(38,6)").alias("sumsq_v"),
+        F.min("min_v").alias("min_v"),
+        F.max("max_v").alias("max_v"),
+    )
+
+
+_AGG_LEDGER = StatsLedger(
+    log="partials",
+    meta_cols=(),
+    partials=lambda df, keys, meta: _agg_partials(df, keys, meta["value_col"]),
+    fold=_agg_fold,
+)
+
+
 def init_agg_ledger(
     df: DataFrame,
     key_cols: "Sequence[str]",
@@ -915,47 +840,20 @@ def init_agg_ledger(
     Merge-on-read: :func:`agg_ledger_report` folds partials with a
     keyed aggregate whose input is ≤ keys × ingests rows — never corpus
     rows.  :func:`compact_agg_ledger` folds the log back to one row per
-    key when the ingest count grows.  Single-writer contract as
-    ``init_dedup_ledger`` — pass ``lock=`` (True or BranchLock kwargs)
-    to ENFORCE it with a lease instead of trusting the scheduler
-    (:func:`_writer_lease`).
+    key when the ingest count grows.  Crash class: marker + landed
+    manifest (``operators/ledger.py``); ``lock=`` (True or BranchLock
+    kwargs) enforces the single-writer discipline with a lease.
     """
-    if lock:
-        with _writer_lease(path, lock):
-            return init_agg_ledger(df, key_cols, value_col, path)
-    import json
-    import os
-
-    spark = df.sparkSession
-    keys = list(key_cols)
-    spark.createDataFrame(
-        [(json.dumps(keys), value_col)], "key_cols string, value_col string"
-    ).write.mode("error").parquet(os.path.join(path, "meta"))
-    _agg_partials(df, keys, value_col).write.mode("error").parquet(
-        os.path.join(path, "partials")
-    )
+    _AGG_LEDGER.init(df, key_cols, value_col, path, lock)
 
 
 def agg_ledger_ingest(batch: DataFrame, path: str, lock=False) -> None:
     """Fold one ingest batch into the ledger: one map-side partial
     aggregate of the BATCH ONLY, appended to the partial log.  Never
     reads prior partials — the O(batch) contract.  ``lock=`` opts into
-    the enforced single-writer lease (:func:`_writer_lease`): a
-    scheduler retry racing this ingest raises instead of silently
-    double-counting the batch."""
-    if lock:
-        with _writer_lease(path, lock):
-            return agg_ledger_ingest(batch, path)
-    import json
-    import os
-
-    spark = batch.sparkSession
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    keys = json.loads(meta["key_cols"])
-    _recover_log_swap(os.path.join(path, "partials"))
-    _agg_partials(batch, keys, meta["value_col"]).write.mode(
-        "append"
-    ).parquet(os.path.join(path, "partials"))
+    the enforced single-writer lease: a scheduler retry racing this
+    ingest raises instead of silently double-counting the batch."""
+    _AGG_LEDGER.ingest(batch, path, lock)
 
 
 def agg_ledger_report(spark, path: str) -> DataFrame:
@@ -966,38 +864,17 @@ def agg_ledger_report(spark, path: str) -> DataFrame:
     squares identity, clamped at 0 against fp negativity — both rounded
     to 6 dp (cross-engine stable).  Keys whose values were all NULL
     report NULL sum/min/max/mean/std but keep their row counts."""
-    import json
-    import os
-
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    keys = json.loads(meta["key_cols"])
-    _recover_log_swap(os.path.join(path, "partials"))
-    merged = (
-        # recursive lookup: streaming ingests land partials in batch-
-        # namespaced SUBDIRECTORIES (exactly-once marker dirs) beside
-        # the flat batch-ingest files
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(os.path.join(path, "partials"))
-        .groupBy(*keys)
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("nn").alias("nn"),
-            F.sum("sum_v").alias("sum_d"),
-            F.sum("sumsq_v").alias("sumsq_d"),
-            F.min("min_v").alias("min_v"),
-            F.max("max_v").alias("max_v"),
-        )
-    )
+    merged, keys, _ = _AGG_LEDGER.read(spark, path)
     nn = F.col("nn")
     # exact decimal sums → double, then pure-double arithmetic: both
     # engines perform the identical IEEE operations on identical inputs
-    mean = F.col("sum_d").cast("double") / nn
-    var = F.col("sumsq_d").cast("double") / nn - mean * mean
+    mean = F.col("sum_v").cast("double") / nn
+    var = F.col("sumsq_v").cast("double") / nn - mean * mean
     return merged.select(
         *keys,
         "cnt",
         "nn",
-        F.col("sum_d").cast("double").alias("sum_v"),
+        F.col("sum_v").cast("double").alias("sum_v"),
         "min_v",
         "max_v",
         F.round(F.when(nn > 0, mean), 6).alias("mean_v"),
@@ -1010,59 +887,24 @@ def agg_ledger_report(spark, path: str) -> DataFrame:
 def compact_agg_ledger(spark, path: str, lock=False) -> None:
     """Fold the partial log back to ONE row per key (bounds merge-on-
     read cost after many ingests).  Reports before and after compaction
-    are identical — decimal sums are order-independent by construction.
-    Write-temp-then-swap so a crashed compaction never loses the log,
-    and the swap is rename-rename-rmtree (:func:`_swap_log_dir`) so the
-    no-partials-dir window a plain rmtree-then-replace leaves is closed
-    by :func:`_recover_log_swap` on the next operation.
+    are identical — the report reads the same fold, and decimal sums
+    are order-independent.  Safe on a STOPPED stream's state, never on
+    a live one (marker + landed manifest class,
+    ``operators/ledger.py``); ``lock=`` enforces that against a
+    concurrent batch writer."""
+    _AGG_LEDGER.compact(spark, path, lock)
 
-    Compaction folds streaming batch subdirectories into flat files,
-    which drops their ``_SUCCESS`` markers — so BEFORE folding it
-    writes a ``landed`` manifest entry (``<path>/landed/``, the
-    touch-files the stream twins maintain) for every committed batch
-    subdir that lacks one (:func:`_manifest_folded_batches`), and never
-    deletes existing entries.  A stream restart that replays a batch
-    whose marker was compacted away therefore always finds its manifest
-    entry and skips — INCLUDING the batch a stream committed without
-    its checkpoint commit OR its own manifest touch (crash between the
-    two), so compacting a STOPPED stream is always safe.  Never compact
-    while a run is LIVE (single-writer discipline: a batch between its
-    partial write and its manifest write would lose the race with the
-    fold).  ``lock=`` enforces the discipline against a concurrent
-    batch writer (:func:`_writer_lease`)."""
-    if lock:
-        with _writer_lease(path, lock):
-            return compact_agg_ledger(spark, path)
-    import json
-    import os
 
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    keys = json.loads(meta["key_cols"])
-    part_dir = os.path.join(path, "partials")
-    _recover_log_swap(part_dir)
-    _manifest_folded_batches(path, "partials")
-    folded = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(part_dir)
-        .groupBy(*keys)
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("nn").alias("nn"),
-            F.sum("sum_v").alias("sum_v"),
-            F.sum("sumsq_v").alias("sumsq_v"),
-            F.min("min_v").alias("min_v"),
-            F.max("max_v").alias("max_v"),
-        )
-        # restore the partial-log schema types (sum widened by the fold)
-        .select(
-            *keys, "cnt", "nn",
-            F.col("sum_v").cast("decimal(38,6)").alias("sum_v"),
-            F.col("sumsq_v").cast("decimal(38,6)").alias("sumsq_v"),
-            "min_v", "max_v",
-        )
-    )
-    folded.write.mode("overwrite").parquet(part_dir + ".compact")
-    _swap_log_dir(part_dir)
+_HLL_LEDGER = StatsLedger(
+    log="registers",
+    meta_cols=("precision",),
+    partials=lambda df, keys, meta: _group_registers(
+        df, meta["value_col"], keys, meta["precision"]
+    ),
+    fold=lambda log, keys, meta: log.groupBy(*keys, "bucket").agg(
+        F.max("reg").alias("reg")
+    ),
+)
 
 
 def init_hll_ledger(
@@ -1081,29 +923,11 @@ def init_hll_ledger(
     Layout at ``path`` (parquet): ``registers`` — an append-only log of
     ``(*key_cols, bucket, reg)`` register rows; ``meta`` — one row
     pinning (key_cols, value_col, precision).  Registers are
-    MAX-mergeable (``_group_registers``), so the log needs no
-    marker/heal machinery at all: duplicate register rows from any
-    replay are idempotent under the report's ``max(reg)`` fold — the
-    strongest crash-safety class of the ledger family (re-appending is
-    HARMLESS, not just detected).  Report = fold + estimate; compact =
-    fold-and-swap.  Same single-writer discipline as the other
-    ledgers; ``lock=`` enforces it (:func:`_writer_lease`)."""
-    if lock:
-        with _writer_lease(path, lock):
-            return init_hll_ledger(df, key_cols, value_col, path,
-                                   precision=precision)
-    import json
-    import os
-
-    spark = df.sparkSession
-    keys = list(key_cols)
-    spark.createDataFrame(
-        [(json.dumps(keys), value_col, int(precision))],
-        "key_cols string, value_col string, precision int",
-    ).write.mode("error").parquet(os.path.join(path, "meta"))
-    _group_registers(df, value_col, keys, precision).write.mode(
-        "error"
-    ).parquet(os.path.join(path, "registers"))
+    MAX-mergeable (``_group_registers``): crash class no guard
+    (``operators/ledger.py``) — a replayed append is HARMLESS, not
+    just detected.  Report = fold + estimate; compact = fold-and-swap.
+    ``lock=`` enforces single-writer discipline with a lease."""
+    _HLL_LEDGER.init(df, key_cols, value_col, path, lock, precision=precision)
 
 
 def hll_ledger_ingest(batch: DataFrame, path: str, lock=False) -> None:
@@ -1111,21 +935,9 @@ def hll_ledger_ingest(batch: DataFrame, path: str, lock=False) -> None:
     rows appended — O(batch) hash aggregate, zero reads of prior
     state, and idempotent under replay (max-merge absorbs
     duplicates).  ``lock=`` serializes against a concurrent compaction
-    swap (:func:`_writer_lease`) — replay-idempotence protects against
-    duplicate APPENDS, not against appending into a dir mid-swap."""
-    if lock:
-        with _writer_lease(path, lock):
-            return hll_ledger_ingest(batch, path)
-    import json
-    import os
-
-    spark = batch.sparkSession
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    keys = json.loads(meta["key_cols"])
-    _recover_log_swap(os.path.join(path, "registers"))
-    _group_registers(
-        batch, meta["value_col"], keys, meta["precision"]
-    ).write.mode("append").parquet(os.path.join(path, "registers"))
+    swap — replay-idempotence protects against duplicate APPENDS, not
+    against appending into a dir mid-swap."""
+    _HLL_LEDGER.ingest(batch, path, lock)
 
 
 def hll_ledger_report(spark, path: str) -> DataFrame:
@@ -1136,42 +948,12 @@ def hll_ledger_report(spark, path: str) -> DataFrame:
     nonzero_registers, estimate)`` — same columns and float discipline
     as :func:`hll_distinct_by`, so the same SQL oracle construction
     replays it."""
-    import json
-    import os
-
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    keys = json.loads(meta["key_cols"])
-    _recover_log_swap(os.path.join(path, "registers"))
-    folded = (
-        spark.read.parquet(os.path.join(path, "registers"))
-        .groupBy(*keys, "bucket")
-        .agg(F.max("reg").alias("reg"))
-    )
+    folded, keys, meta = _HLL_LEDGER.read(spark, path)
     return _group_hll_estimate(folded, keys, meta["precision"])
 
 
 def compact_hll_ledger(spark, path: str, lock=False) -> None:
     """Fold the register log to one row per (keys, bucket).  Reports
     before and after are identical (max is idempotent/associative).
-    Write-temp-then-swap like :func:`compact_agg_ledger` — and note
-    this ledger needs no ``landed`` manifest at all: register rows are
-    max-merge idempotent, so a replay after compaction re-appends
-    harmlessly instead of double-counting.  ``lock=`` serializes
-    against concurrent appends (:func:`_writer_lease`)."""
-    if lock:
-        with _writer_lease(path, lock):
-            return compact_hll_ledger(spark, path)
-    import json
-    import os
-
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    keys = json.loads(meta["key_cols"])
-    reg_dir = os.path.join(path, "registers")
-    _recover_log_swap(reg_dir)
-    folded = (
-        spark.read.parquet(reg_dir)
-        .groupBy(*keys, "bucket")
-        .agg(F.max("reg").alias("reg"))
-    )
-    folded.write.mode("overwrite").parquet(reg_dir + ".compact")
-    _swap_log_dir(reg_dir)
+    ``lock=`` serializes against concurrent appends."""
+    _HLL_LEDGER.compact(spark, path, lock)

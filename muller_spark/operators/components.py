@@ -31,6 +31,12 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from muller_spark.operators.ledger import (
+    _recover_log_swap,
+    _swap_log_dir,
+    _writer_lease,
+)
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     """Orient every edge large→small, drop self-loops, dedup."""
@@ -244,15 +250,13 @@ def init_components_ledger(
     - ``meta`` — pins (buckets, id type) so mixed-geometry state is
       impossible.
 
-    Crash class: REPLAY-ABSORBING BY THEOREM, the HLL ledger's class
-    and the strongest in the family — component merging is a join-
-    semilattice (idempotent, commutative, associative), so re-ingesting
-    any batch maps every edge to endpoints that already share a root
-    (self-loops, dropped) and the ingest is a no-op.  The one ordered
-    crash window (labels appended, remaps not yet swapped) leaves the
-    batch half-absorbed and HEALS on the replay Structured Streaming
-    guarantees — so the streaming twin needs no marker machinery at
-    all.  Single-writer discipline as the other ledgers.
+    Crash class: no guard (``operators/ledger.py``) — component
+    merging is a join-semilattice (idempotent, commutative,
+    associative), so re-ingesting any batch maps every edge to
+    endpoints that already share a root (self-loops, dropped) and the
+    ingest is a no-op.  The one ordered crash window (labels appended,
+    remaps not yet swapped) leaves the batch half-absorbed and HEALS on
+    replay.  Single-writer discipline as the other ledgers.
 
     At 100 TB: ingest cost = bucket-pruned label lookup (O(batch
     buckets)) + star rounds on the ROOT-SPACE reduced graph (≤ batch
@@ -262,37 +266,31 @@ def init_components_ledger(
     is corpus-sized by definition.
 
     ``lock=`` enforces the single-writer discipline with a lease
-    (``operators.aggregate._writer_lease``).
+    (``operators.ledger._writer_lease``).
     """
-    if lock:
-        from muller_spark.operators.aggregate import _writer_lease
-
-        with _writer_lease(path, lock):
-            return init_components_ledger(
-                edges, path, src=src, dst=dst, buckets=buckets
-            )
-    spark = edges.sparkSession
-    canon = _canonical(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    )
-    labels = connected_components(canon, src="u", dst="v")
-    id_type = labels.schema["id"].dataType.simpleString()
-    spark.createDataFrame(
-        [(int(buckets), id_type)], "buckets int, id_type string"
-    ).write.mode("error").parquet(os.path.join(path, "meta"))
-    (
-        labels.withColumn("bucket", _bucket_expr("id", buckets))
-        # co-locate each bucket before the partitioned write: without
-        # this every task writes a file per bucket it holds (tasks ×
-        # buckets tiny files per ingest — a listing-cost leak)
-        .repartition(F.col("bucket"))
-        .write.mode("error")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "labels"))
-    )
-    spark.createDataFrame(
-        [], f"old_root {id_type}, root {id_type}"
-    ).write.mode("error").parquet(os.path.join(path, "remaps"))
+    with _writer_lease(path, lock):
+        spark = edges.sparkSession
+        canon = _canonical(
+            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        )
+        labels = connected_components(canon, src="u", dst="v")
+        id_type = labels.schema["id"].dataType.simpleString()
+        spark.createDataFrame(
+            [(int(buckets), id_type)], "buckets int, id_type string"
+        ).write.mode("error").parquet(os.path.join(path, "meta"))
+        (
+            labels.withColumn("bucket", _bucket_expr("id", buckets))
+            # co-locate each bucket before the partitioned write: without
+            # this every task writes a file per bucket it holds (tasks ×
+            # buckets tiny files per ingest — a listing-cost leak)
+            .repartition(F.col("bucket"))
+            .write.mode("error")
+            .partitionBy("bucket")
+            .parquet(os.path.join(path, "labels"))
+        )
+        spark.createDataFrame(
+            [], f"old_root {id_type}, root {id_type}"
+        ).write.mode("error").parquet(os.path.join(path, "remaps"))
 
 
 def _read_labels(spark, path: str) -> DataFrame:
@@ -302,7 +300,6 @@ def _read_labels(spark, path: str) -> DataFrame:
     to an empty frame with the meta-pinned schema."""
     from pyspark.errors import AnalysisException
 
-    from muller_spark.operators.aggregate import _recover_log_swap
 
     _recover_log_swap(os.path.join(path, "labels"))
     try:
@@ -338,7 +335,6 @@ def _remaps_df(spark, path: str) -> DataFrame:
 def _resolved_labels(spark, path: str) -> DataFrame:
     """labels ⟕ remaps, one hop (remaps are closed): the CURRENT
     ``(id, component)`` view."""
-    from muller_spark.operators.aggregate import _recover_log_swap
 
     _recover_log_swap(os.path.join(path, "remaps"))
     labels = _read_labels(spark, path).select("id", "component")
@@ -397,157 +393,147 @@ def components_ledger_ingest(
     but two ingests racing mid-flight can interleave the label/remap
     writes, which the lease prevents.
     """
-    if lock:
-        from muller_spark.operators.aggregate import _writer_lease
+    with _writer_lease(path, lock):
+        spark = edges.sparkSession
+        meta = spark.read.parquet(os.path.join(path, "meta")).first()
+        buckets = int(meta["buckets"])
+        # Geometry guard: bucketing hashes with xxhash64, which is
+        # TYPE-sensitive — an int-typed batch against a long-seeded ledger
+        # buckets the same ids differently, missing existing label rows and
+        # silently appending duplicate (id, component) rows with conflicting
+        # components.  Widen integrals to the pinned type; anything lossy or
+        # cross-family raises instead of corrupting state.
+        pinned = meta["id_type"]
+        _INT_WIDTH = {"tinyint": 1, "smallint": 2, "int": 4, "bigint": 8}
+        batch = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        for c in ("u", "v"):
+            got = batch.schema[c].dataType.simpleString()
+            if got == pinned:
+                continue
+            if (
+                got in _INT_WIDTH
+                and pinned in _INT_WIDTH
+                and _INT_WIDTH[got] <= _INT_WIDTH[pinned]
+            ):
+                batch = batch.withColumn(c, F.col(c).cast(pinned))
+            else:
+                raise TypeError(
+                    f"components ledger at {path!r} is keyed by id type "
+                    f"{pinned!r} but the batch column "
+                    f"{src if c == 'u' else dst!r} is {got!r}; xxhash64 "
+                    "bucketing is type-sensitive, so mixed geometry would "
+                    "silently fork labels — cast the batch explicitly"
+                )
+        delta = _canonical(batch).localCheckpoint()
+        nodes = (
+            delta.select(F.col("u").alias("id"))
+            .union(delta.select(F.col("v").alias("id")))
+            .distinct()
+        )
+        # bucket-pruned lookup: ≤ min(|nodes|, buckets) partition dirs read.
+        # ONE job decides emptiness AND the bucket list (bounded driver
+        # state: ≤ `buckets` ints)
+        hit = sorted(
+            r[0]
+            for r in nodes.select(
+                _bucket_expr("id", buckets).alias("b")
+            ).distinct().collect()
+        )
+        if not hit:
+            return  # empty batch after self-loop/dedup canonicalization
 
-        with _writer_lease(path, lock):
-            return components_ledger_ingest(
-                edges, path, src=src, dst=dst, max_rounds=max_rounds
-            )
-    spark = edges.sparkSession
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    buckets = int(meta["buckets"])
-    # Geometry guard: bucketing hashes with xxhash64, which is
-    # TYPE-sensitive — an int-typed batch against a long-seeded ledger
-    # buckets the same ids differently, missing existing label rows and
-    # silently appending duplicate (id, component) rows with conflicting
-    # components.  Widen integrals to the pinned type; anything lossy or
-    # cross-family raises instead of corrupting state.
-    pinned = meta["id_type"]
-    _INT_WIDTH = {"tinyint": 1, "smallint": 2, "int": 4, "bigint": 8}
-    batch = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    for c in ("u", "v"):
-        got = batch.schema[c].dataType.simpleString()
-        if got == pinned:
-            continue
-        if (
-            got in _INT_WIDTH
-            and pinned in _INT_WIDTH
-            and _INT_WIDTH[got] <= _INT_WIDTH[pinned]
-        ):
-            batch = batch.withColumn(c, F.col(c).cast(pinned))
-        else:
-            raise TypeError(
-                f"components ledger at {path!r} is keyed by id type "
-                f"{pinned!r} but the batch column "
-                f"{src if c == 'u' else dst!r} is {got!r}; xxhash64 "
-                "bucketing is type-sensitive, so mixed geometry would "
-                "silently fork labels — cast the batch explicitly"
-            )
-    delta = _canonical(batch).localCheckpoint()
-    nodes = (
-        delta.select(F.col("u").alias("id"))
-        .union(delta.select(F.col("v").alias("id")))
-        .distinct()
-    )
-    # bucket-pruned lookup: ≤ min(|nodes|, buckets) partition dirs read.
-    # ONE job decides emptiness AND the bucket list (bounded driver
-    # state: ≤ `buckets` ints)
-    hit = sorted(
-        r[0]
-        for r in nodes.select(
-            _bucket_expr("id", buckets).alias("b")
-        ).distinct().collect()
-    )
-    if not hit:
-        return  # empty batch after self-loop/dedup canonicalization
-    from muller_spark.operators.aggregate import (
-        _recover_log_swap,
-        _swap_log_dir,
-    )
-
-    _recover_log_swap(os.path.join(path, "remaps"))
-    labels_sub = (
-        _read_labels(spark, path)
-        .where(F.col("bucket").isin(hit))
-        .select("id", "component")
-    )
-    remaps = _remaps_df(spark, path)
-    resolved = (
-        nodes.join(labels_sub, "id", "left")
-        .join(
-            remaps,
-            F.col("component") == remaps["old_root"],
-            "left",
+        _recover_log_swap(os.path.join(path, "remaps"))
+        labels_sub = (
+            _read_labels(spark, path)
+            .where(F.col("bucket").isin(hit))
+            .select("id", "component")
         )
-        # unseen id → its own root (new node)
-        .select(
-            "id",
-            F.coalesce("root", "component", "id").alias("cur_root"),
-        )
-        .localCheckpoint()
-    )
-    reduced = (
-        delta.join(resolved.withColumnRenamed("id", "u"), "u")
-        .withColumnRenamed("cur_root", "ru")
-        .join(resolved.withColumnRenamed("id", "v"), "v")
-        .withColumnRenamed("cur_root", "rv")
-        .select(F.col("ru").alias("src"), F.col("rv").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-    )
-    new_nodes = resolved.where(F.col("cur_root") == F.col("id")).join(
-        labels_sub.select("id"), "id", "left_anti"
-    ).select("id")
-    if reduced.take(1):
-        # no extra checkpoint: connected_components' own fixed point is
-        # already checkpointed; its output is two cheap projections
-        m = connected_components(reduced, max_rounds=max_rounds)
-    else:
-        m = None
-
-    # 4. label rows for new ids: their reduced-CC component, or (for a
-    # new id whose every edge collapsed — only possible on a healing
-    # replay, where it already resolves through nothing) itself
-    if m is not None:
-        new_labels = (
-            new_nodes.join(m, "id", "left")
-            .select(
-                "id", F.coalesce("component", "id").alias("component")
-            )
-        )
-    else:
-        new_labels = new_nodes.select(
-            "id", F.col("id").alias("component")
-        )
-    (
-        new_labels.withColumn("bucket", _bucket_expr("id", buckets))
-        .repartition(F.col("bucket"))  # one file per touched bucket
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "labels"))
-    )
-
-    # 5. remap rewrite: demoted EXISTING roots (identity rows excluded;
-    # new ids live in labels, not remaps) + re-resolve old entries
-    if m is not None:
-        demoted = (
-            m.where(F.col("id") != F.col("component"))
-            .join(new_nodes.withColumnRenamed("id", "_n"),
-                  F.col("id") == F.col("_n"), "left_anti")
-            .select(
-                F.col("id").alias("old_root"),
-                F.col("component").alias("root"),
-            )
-        )
-        refreshed = (
-            remaps.alias("r")
+        remaps = _remaps_df(spark, path)
+        resolved = (
+            nodes.join(labels_sub, "id", "left")
             .join(
-                m.alias("m2"),
-                F.col("r.root") == F.col("m2.id"),
+                remaps,
+                F.col("component") == remaps["old_root"],
                 "left",
             )
+            # unseen id → its own root (new node)
             .select(
-                F.col("r.old_root").alias("old_root"),
-                F.coalesce(F.col("m2.component"), F.col("r.root")).alias(
-                    "root"
-                ),
+                "id",
+                F.coalesce("root", "component", "id").alias("cur_root"),
             )
+            .localCheckpoint()
         )
-        remap_dir = os.path.join(path, "remaps")
-        refreshed.unionByName(demoted).write.mode("overwrite").parquet(
-            remap_dir + ".compact"
+        reduced = (
+            delta.join(resolved.withColumnRenamed("id", "u"), "u")
+            .withColumnRenamed("cur_root", "ru")
+            .join(resolved.withColumnRenamed("id", "v"), "v")
+            .withColumnRenamed("cur_root", "rv")
+            .select(F.col("ru").alias("src"), F.col("rv").alias("dst"))
+            .where(F.col("src") != F.col("dst"))
         )
-        _swap_log_dir(remap_dir)
+        new_nodes = resolved.where(F.col("cur_root") == F.col("id")).join(
+            labels_sub.select("id"), "id", "left_anti"
+        ).select("id")
+        if reduced.take(1):
+            # no extra checkpoint: connected_components' own fixed point is
+            # already checkpointed; its output is two cheap projections
+            m = connected_components(reduced, max_rounds=max_rounds)
+        else:
+            m = None
+
+        # 4. label rows for new ids: their reduced-CC component, or (for a
+        # new id whose every edge collapsed — only possible on a healing
+        # replay, where it already resolves through nothing) itself
+        if m is not None:
+            new_labels = (
+                new_nodes.join(m, "id", "left")
+                .select(
+                    "id", F.coalesce("component", "id").alias("component")
+                )
+            )
+        else:
+            new_labels = new_nodes.select(
+                "id", F.col("id").alias("component")
+            )
+        (
+            new_labels.withColumn("bucket", _bucket_expr("id", buckets))
+            .repartition(F.col("bucket"))  # one file per touched bucket
+            .write.mode("append")
+            .partitionBy("bucket")
+            .parquet(os.path.join(path, "labels"))
+        )
+
+        # 5. remap rewrite: demoted EXISTING roots (identity rows excluded;
+        # new ids live in labels, not remaps) + re-resolve old entries
+        if m is not None:
+            demoted = (
+                m.where(F.col("id") != F.col("component"))
+                .join(new_nodes.withColumnRenamed("id", "_n"),
+                      F.col("id") == F.col("_n"), "left_anti")
+                .select(
+                    F.col("id").alias("old_root"),
+                    F.col("component").alias("root"),
+                )
+            )
+            refreshed = (
+                remaps.alias("r")
+                .join(
+                    m.alias("m2"),
+                    F.col("r.root") == F.col("m2.id"),
+                    "left",
+                )
+                .select(
+                    F.col("r.old_root").alias("old_root"),
+                    F.coalesce(F.col("m2.component"), F.col("r.root")).alias(
+                        "root"
+                    ),
+                )
+            )
+            remap_dir = os.path.join(path, "remaps")
+            refreshed.unionByName(demoted).write.mode("overwrite").parquet(
+                remap_dir + ".compact"
+            )
+            _swap_log_dir(remap_dir)
 
 
 def compact_components_ledger(spark, path: str, lock=False) -> None:
@@ -561,39 +547,31 @@ def compact_components_ledger(spark, path: str, lock=False) -> None:
     roots can never become roots again, since a component's root is
     its min member and mins only decrease under merges).  ``lock=``
     enforces the no-compact-while-ingesting discipline with a lease."""
-    from muller_spark.operators.aggregate import (
-        _recover_log_swap,
-        _swap_log_dir,
-        _writer_lease,
-    )
 
-    if lock:
-        with _writer_lease(path, lock):
-            return compact_components_ledger(spark, path)
-
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    buckets = int(meta["buckets"])
-    labels_dir = os.path.join(path, "labels")
-    remap_dir = os.path.join(path, "remaps")
-    _recover_log_swap(labels_dir)
-    _recover_log_swap(remap_dir)
-    (
-        _resolved_labels(spark, path)
-        .withColumn("bucket", _bucket_expr("id", buckets))
-        .repartition(F.col("bucket"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(labels_dir + ".compact")
-    )
-    _swap_log_dir(labels_dir)
-    # Reset the remap table through the same crash-safe swap as the
-    # label log: write the empty frame to a `.compact` sibling and
-    # promote it.  A plain overwrite has a window (old dir deleted,
-    # new dir uncommitted) where a crash leaves `remaps/` missing and
-    # _recover_log_swap cannot heal it (no .compact sibling) — every
-    # subsequent report/ingest would raise until manual repair.
-    id_type = meta["id_type"]
-    spark.createDataFrame(
-        [], f"old_root {id_type}, root {id_type}"
-    ).write.mode("overwrite").parquet(remap_dir + ".compact")
-    _swap_log_dir(remap_dir)
+    with _writer_lease(path, lock):
+        meta = spark.read.parquet(os.path.join(path, "meta")).first()
+        buckets = int(meta["buckets"])
+        labels_dir = os.path.join(path, "labels")
+        remap_dir = os.path.join(path, "remaps")
+        _recover_log_swap(labels_dir)
+        _recover_log_swap(remap_dir)
+        (
+            _resolved_labels(spark, path)
+            .withColumn("bucket", _bucket_expr("id", buckets))
+            .repartition(F.col("bucket"))
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(labels_dir + ".compact")
+        )
+        _swap_log_dir(labels_dir)
+        # Reset the remap table through the same crash-safe swap as the
+        # label log: write the empty frame to a `.compact` sibling and
+        # promote it.  A plain overwrite has a window (old dir deleted,
+        # new dir uncommitted) where a crash leaves `remaps/` missing and
+        # _recover_log_swap cannot heal it (no .compact sibling) — every
+        # subsequent report/ingest would raise until manual repair.
+        id_type = meta["id_type"]
+        spark.createDataFrame(
+            [], f"old_root {id_type}, root {id_type}"
+        ).write.mode("overwrite").parquet(remap_dir + ".compact")
+        _swap_log_dir(remap_dir)

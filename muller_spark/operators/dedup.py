@@ -26,6 +26,11 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from muller_spark.operators.ledger import (
+    _compact_ledger_log,
+    _recover_ledger_log,
+    _writer_lease,
+)
 from muller_spark.partitioning import ensure_parallelism
 from muller_spark.plans.conditions import TOKEN_SPLIT_REGEX
 
@@ -3064,45 +3069,38 @@ def init_embedding_ledger(
     ``lock=`` (True or BranchLock kwargs) to enforce it with the
     ledger's lease (``<path>/locks/writer.lock``) instead of trusting
     the scheduler."""
-    from muller_spark.operators.aggregate import _writer_lease
-
-    if lock:
-        with _writer_lease(path, lock):
-            return init_embedding_ledger(
-                df, vec_col, id_col, path, num_planes=num_planes,
-                num_tables=num_tables, seed=seed, dim=dim,
-            )
-    spark = df.sparkSession
-    if dim is None:
-        first = df.select(vec_col).filter(
-            F.col(vec_col).isNotNull()
-        ).first()
-        if first is None:
-            raise ValueError(
-                "cannot infer dim from an empty (or all-NULL) frame: "
-                "pass dim= to seed an empty embedding ledger"
-            )
-        dim = len(first[0])
-    # round-12 optimization: ONE kernel pass feeds both artifacts — the
-    # corpus crosses the Python boundary once (vs once per artifact),
-    # checkpointed so the two writes re-read the materialized rows
-    # instead of re-running the upstream plan.  File contents identical
-    # (same numpy ops; bucket rows recovered by JVM posexplode)
-    emb = _srp_embed_frame(
-        df, vec_col, id_col, num_planes, num_tables, seed, dim
-    ).localCheckpoint()
-    _table_bucket_rows(emb).select(
-        "table", "bucket", "id"
-    ).write.mode("overwrite").parquet(os.path.join(path, "buckets"))
-    emb.select("id", "vec").write.mode("overwrite").parquet(
-        os.path.join(path, "vectors")
-    )
-    spark.createDataFrame(
-        [(int(num_planes), int(num_tables), int(seed), int(dim))],
-        "num_planes int, num_tables int, seed long, dim int",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "meta")
-    )
+    with _writer_lease(path, lock):
+        spark = df.sparkSession
+        if dim is None:
+            first = df.select(vec_col).filter(
+                F.col(vec_col).isNotNull()
+            ).first()
+            if first is None:
+                raise ValueError(
+                    "cannot infer dim from an empty (or all-NULL) frame: "
+                    "pass dim= to seed an empty embedding ledger"
+                )
+            dim = len(first[0])
+        # round-12 optimization: ONE kernel pass feeds both artifacts — the
+        # corpus crosses the Python boundary once (vs once per artifact),
+        # checkpointed so the two writes re-read the materialized rows
+        # instead of re-running the upstream plan.  File contents identical
+        # (same numpy ops; bucket rows recovered by JVM posexplode)
+        emb = _srp_embed_frame(
+            df, vec_col, id_col, num_planes, num_tables, seed, dim
+        ).localCheckpoint()
+        _table_bucket_rows(emb).select(
+            "table", "bucket", "id"
+        ).write.mode("overwrite").parquet(os.path.join(path, "buckets"))
+        emb.select("id", "vec").write.mode("overwrite").parquet(
+            os.path.join(path, "vectors")
+        )
+        spark.createDataFrame(
+            [(int(num_planes), int(num_tables), int(seed), int(dim))],
+            "num_planes int, num_tables int, seed long, dim int",
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(path, "meta")
+        )
 
 
 def _embedding_ledger_dups(
@@ -3206,71 +3204,29 @@ def embedding_against_ledger(
     half-indexed, and a RETRY of the same batch rejects
     already-appended rows as dups of themselves — at-least-once ledger
     state, at-most-once survivor output."""
-    from muller_spark.operators.aggregate import _writer_lease
-
-    if lock and update:
-        with _writer_lease(path, lock):
-            return embedding_against_ledger(
-                batch_df, vec_col, id_col, path, threshold=threshold,
-                update=update,
-            )
-    sig, uv, verified = _embedding_ledger_dups(
-        batch_df, vec_col, id_col, path, threshold
-    )
-    dup_ids = verified.select("id").distinct()
-    # batch ids come from the one-row-per-vector unit frame, not from a
-    # distinct over the num_tables× posting explode — same id set (every
-    # batch row carries a full bucket array), one exchange fewer
-    survivor_ids = uv.select("id").join(dup_ids, "id", "left_anti")
-    survivors = batch_df.join(
-        survivor_ids.withColumnRenamed("id", id_col), id_col, "semi"
-    )
-    if update:
-        # both source frames are already checkpointed (the decision
-        # barrier), so the appends re-read materialized rows — same
-        # crash window as before: vectors first, then buckets
-        uv.join(survivor_ids, "id", "semi").select("id", "vec").write.mode(
-            "append"
-        ).parquet(os.path.join(path, "vectors"))
-        sig.join(survivor_ids, "id", "semi").select(
-            "table", "bucket", "id"
-        ).write.mode("append").parquet(os.path.join(path, "buckets"))
-    return survivors
-
-
-def _compact_ledger_log(spark, path: str, names: "list[str]") -> None:
-    """Distinct-fold each listed ledger table through the family's
-    crash-safe swap (``aggregate._swap_log_dir``): the replacement is
-    fully written to ``<table>.compact`` before the live dir is
-    touched, and the only no-live-dir window (between two renames) is
-    healed by ``_recover_log_swap`` on the next operation.  Tables are
-    folded one at a time — a crash between two tables leaves one
-    folded and one not, which is CORRECT (folding is logically a
-    no-op: duplicate rows are decision-harmless, compaction only
-    reclaims their space and file count)."""
-    from muller_spark.operators.aggregate import (
-        _recover_log_swap,
-        _swap_log_dir,
-    )
-
-    for name in names:
-        live = os.path.join(path, name)
-        _recover_log_swap(live)
-        spark.read.parquet(live).distinct().write.mode("overwrite").parquet(
-            live + ".compact"
+    with _writer_lease(path, lock if update else False):
+        sig, uv, verified = _embedding_ledger_dups(
+            batch_df, vec_col, id_col, path, threshold
         )
-        _swap_log_dir(live)
-
-
-def _recover_ledger_log(path: str, names: "list[str]") -> None:
-    """Heal interrupted compaction swaps for the listed tables before
-    a read — consulted by every against/pairs entry point so a crash
-    inside :func:`_compact_ledger_log` self-repairs instead of leaving
-    the ledger unreadable (the components-ledger remap lesson)."""
-    from muller_spark.operators.aggregate import _recover_log_swap
-
-    for name in names:
-        _recover_log_swap(os.path.join(path, name))
+        dup_ids = verified.select("id").distinct()
+        # batch ids come from the one-row-per-vector unit frame, not from a
+        # distinct over the num_tables× posting explode — same id set (every
+        # batch row carries a full bucket array), one exchange fewer
+        survivor_ids = uv.select("id").join(dup_ids, "id", "left_anti")
+        survivors = batch_df.join(
+            survivor_ids.withColumnRenamed("id", id_col), id_col, "semi"
+        )
+        if update:
+            # both source frames are already checkpointed (the decision
+            # barrier), so the appends re-read materialized rows — same
+            # crash window as before: vectors first, then buckets
+            uv.join(survivor_ids, "id", "semi").select("id", "vec").write.mode(
+                "append"
+            ).parquet(os.path.join(path, "vectors"))
+            sig.join(survivor_ids, "id", "semi").select(
+                "table", "bucket", "id"
+            ).write.mode("append").parquet(os.path.join(path, "buckets"))
+        return survivors
 
 
 def compact_neardup_ledger(spark, path: str, lock=False) -> None:
@@ -3283,36 +3239,24 @@ def compact_neardup_ledger(spark, path: str, lock=False) -> None:
     family's single-writer contract; ``lock=`` enforces it with the
     ledger's lease.  Crash-safe per table via the ``.compact`` sibling
     swap; an interrupted swap heals on the next query or compaction."""
-    from muller_spark.operators.aggregate import _writer_lease
-
-    if lock:
-        with _writer_lease(path, lock):
-            return compact_neardup_ledger(spark, path)
-    _compact_ledger_log(spark, path, ["shingles", "bands"])
+    with _writer_lease(path, lock):
+        _compact_ledger_log(spark, path, ["shingles", "bands"])
 
 
 def compact_hamming_ledger(spark, path: str, lock=False) -> None:
     """Rewrite the Hamming ledger's ``blocks`` posting log to distinct
     rows — the :func:`compact_neardup_ledger` contract for the media
     ledger."""
-    from muller_spark.operators.aggregate import _writer_lease
-
-    if lock:
-        with _writer_lease(path, lock):
-            return compact_hamming_ledger(spark, path)
-    _compact_ledger_log(spark, path, ["blocks"])
+    with _writer_lease(path, lock):
+        _compact_ledger_log(spark, path, ["blocks"])
 
 
 def compact_embedding_ledger(spark, path: str, lock=False) -> None:
     """Rewrite the embedding ledger's ``vectors`` + ``buckets`` logs to
     distinct rows — the :func:`compact_neardup_ledger` contract for
     the semantic ledger."""
-    from muller_spark.operators.aggregate import _writer_lease
-
-    if lock:
-        with _writer_lease(path, lock):
-            return compact_embedding_ledger(spark, path)
-    _compact_ledger_log(spark, path, ["vectors", "buckets"])
+    with _writer_lease(path, lock):
+        _compact_ledger_log(spark, path, ["vectors", "buckets"])
 
 
 def embedding_pairs_against_ledger(

@@ -22,9 +22,10 @@ level replay absorption).
 
 Crash/consistency contract, inherited from the stages: pair ingest
 into the components ledger is replay-absorbing (semilattice), near-dup
-admission is marker-guarded in its streaming twin, and ``lock=``
-passes an enforced single-writer lease down to every mutation
-(``operators/aggregate._writer_lease``).
+admission is heal-or-advance in its streaming twin (crash classes in
+``operators/ledger.py``), and ``lock=`` passes an enforced
+single-writer lease down to every mutation
+(``operators/ledger._writer_lease``).
 """
 
 from __future__ import annotations
@@ -32,6 +33,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
+
+from muller_spark.operators.ledger import _writer_lease
 
 
 class IncrementalDedupFlow:
@@ -79,21 +82,23 @@ class IncrementalDedupFlow:
         """Seed both ledgers: the near-dup ledger from the (already
         deduplicated or trusted) seed corpus, the cluster ledger empty
         — seed-internal duplicates are the one-time corpus-wide pass
-        (``dedup_clusters``), not this flow's job."""
+        (``dedup_clusters``), not this flow's job.  With ``lock`` set
+        the near-dup ledger's lease is held throughout."""
         from muller_spark.operators.components import init_components_ledger
         from muller_spark.operators.dedup import init_neardup_ledger
 
-        init_neardup_ledger(
-            seed_df, self.text_col, self.id_col, self.neardup_path,
-            num_hashes=self.num_hashes, shingle_size=self.shingle_size,
-            bands=self.bands,
-        )
-        spark = seed_df.sparkSession
-        id_type = seed_df.schema[self.id_col].dataType.simpleString()
-        init_components_ledger(
-            spark.createDataFrame([], f"src {id_type}, dst {id_type}"),
-            self.clusters_path, buckets=self.buckets, lock=self.lock,
-        )
+        with _writer_lease(self.neardup_path, self.lock):
+            init_neardup_ledger(
+                seed_df, self.text_col, self.id_col, self.neardup_path,
+                num_hashes=self.num_hashes, shingle_size=self.shingle_size,
+                bands=self.bands,
+            )
+            spark = seed_df.sparkSession
+            id_type = seed_df.schema[self.id_col].dataType.simpleString()
+            init_components_ledger(
+                spark.createDataFrame([], f"src {id_type}, dst {id_type}"),
+                self.clusters_path, buckets=self.buckets, lock=self.lock,
+            )
 
     def ingest(self, batch_df: DataFrame) -> DataFrame:
         """One batch through the whole chain; returns the batch's
@@ -104,7 +109,9 @@ class IncrementalDedupFlow:
         would pair with itself), and the pair edges are checkpointed
         before the components ingest consumes them twice (resolve +
         append) — re-deriving them after admission would see the
-        mutated ledger."""
+        mutated ledger.  With ``lock`` set the near-dup ledger's lease
+        is held for the whole chain, so a refused ingest leaves both
+        ledgers untouched."""
         from muller_spark.operators.components import (
             components_ledger_ingest,
         )
@@ -113,18 +120,19 @@ class IncrementalDedupFlow:
             neardup_pairs_against_ledger,
         )
 
-        pairs = neardup_pairs_against_ledger(
-            batch_df, self.text_col, self.id_col, self.neardup_path,
-            threshold=self.threshold,
-        ).localCheckpoint()
-        components_ledger_ingest(
-            pairs, self.clusters_path, src="id_a", dst="id_b",
-            lock=self.lock,
-        )
-        return neardup_against_ledger(
-            batch_df, self.text_col, self.id_col, self.neardup_path,
-            threshold=self.threshold, update=True,
-        )
+        with _writer_lease(self.neardup_path, self.lock):
+            pairs = neardup_pairs_against_ledger(
+                batch_df, self.text_col, self.id_col, self.neardup_path,
+                threshold=self.threshold,
+            ).localCheckpoint()
+            components_ledger_ingest(
+                pairs, self.clusters_path, src="id_a", dst="id_b",
+                lock=self.lock,
+            )
+            return neardup_against_ledger(
+                batch_df, self.text_col, self.id_col, self.neardup_path,
+                threshold=self.threshold, update=True,
+            )
 
     def stream(
         self,

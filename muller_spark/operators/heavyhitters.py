@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from muller_spark.operators.ledger import StatsLedger
+
 # sentinel item for the per-partial error row (parquet-safe: a real
 # item can never be NULL because nulls are dropped before counting)
 _ERR_ITEM = None
@@ -195,19 +197,17 @@ def heavy_hitters(
 # quantile ledger; top-k: this)
 # ---------------------------------------------------------------------------
 
-def _mg_summary_frame(
-    df: DataFrame,
-    value_col: str,
-    k: int,
+def _merge_summaries(
+    partials: DataFrame,
     keys: "list[str]",
+    k: int,
     src_fields,
 ) -> DataFrame:
-    """One MERGED Misra–Gries summary per key, in the mergeable partial
-    row form (``*keys, item, cnt, err``) — the unit a ledger ingest
-    appends.  Two-level bounded build exactly as :func:`heavy_hitters`
-    (map-side partials → one summary-row shuffle → per-key merge), but
-    stopping at the partial form so later ingests can keep merging."""
-    partials = _mg_partials(df, value_col, k, keys, src_fields)
+    """Per-key merge of Misra–Gries partial rows, kept in the partial
+    row form (``*keys, item, cnt, err``).  A key's whole history folds
+    through ONE ``_MG.merge_rows`` call — a single combine + at most one
+    decrement — so the merge is deterministic in the row multiset
+    (order-independent): merging a log is exactly merging its rows."""
     merge_keys = keys if keys else ["_g"]
     if not keys:
         partials = partials.withColumn("_g", F.lit(0))
@@ -226,6 +226,35 @@ def _mg_summary_frame(
         .applyInPandas(merge_group, _partial_row_schema(src_fields))
         .select(*keys, "item", "cnt", "err")
     )
+
+
+def _mg_summary_frame(
+    df: DataFrame,
+    value_col: str,
+    k: int,
+    keys: "list[str]",
+) -> DataFrame:
+    """One MERGED Misra–Gries summary per key, in the mergeable partial
+    row form — the unit a ledger ingest appends.  Two-level bounded
+    build exactly as :func:`heavy_hitters` (map-side partials → one
+    summary-row shuffle → per-key merge), but stopping at the partial
+    form so later ingests can keep merging."""
+    src_fields = [df.schema[c] for c in keys]
+    return _merge_summaries(
+        _mg_partials(df, value_col, k, keys, src_fields), keys, k, src_fields
+    )
+
+
+_MG_LEDGER = StatsLedger(
+    log="summaries",
+    meta_cols=("k",),
+    partials=lambda df, keys, meta: _mg_summary_frame(
+        df, meta["value_col"], int(meta["k"]), keys
+    ),
+    fold=lambda log, keys, meta: _merge_summaries(
+        log, keys, int(meta["k"]), [log.schema[c] for c in keys]
+    ),
+)
 
 
 def init_mg_ledger(
@@ -247,11 +276,10 @@ def init_mg_ledger(
     — one row pinning (key_cols, value_col, k).  MG summaries are
     MERGEABLE (PODS 2012 — combine counts, subtract the (k+1)-th
     largest, keep positives: ``_MG.add_counts``) but NOT
-    replay-tolerant — a re-appended summary double-counts its batch —
-    so this ledger takes the AGGREGATE ledger's crash class: batch
-    ingest is single-writer, and the streaming twin
-    (:func:`muller_spark.streaming.windows.mg_ledger_stream`) carries
-    the marker + ``landed``-manifest discipline.
+    replay-tolerant — a re-appended summary double-counts its batch:
+    crash class marker + landed manifest (``operators/ledger.py``),
+    carried by the streaming twin
+    (:func:`muller_spark.streaming.windows.mg_ledger_stream`).
 
     Ingest = one bounded two-level build of the batch appended to the
     log — O(batch), ≤ keys × (k+1) rows, zero reads of prior state.
@@ -263,26 +291,8 @@ def init_mg_ledger(
     decrement ever fires, so the report is the exact frequency table
     with ``err_bound`` 0 — the regime the driver oracle value-checks;
     over-capacity guarantees are property-tested.  ``lock=`` enforces
-    the single-writer discipline with a lease
-    (``operators.aggregate._writer_lease``)."""
-    if lock:
-        from muller_spark.operators.aggregate import _writer_lease
-
-        with _writer_lease(path, lock):
-            return init_mg_ledger(df, key_cols, value_col, path, k=k)
-    import json
-    import os
-
-    spark = df.sparkSession
-    keys = list(key_cols)
-    src_fields = [df.schema[c] for c in keys]
-    spark.createDataFrame(
-        [(json.dumps(keys), value_col, int(k))],
-        "key_cols string, value_col string, k int",
-    ).write.mode("error").parquet(os.path.join(path, "meta"))
-    _mg_summary_frame(df, value_col, k, keys, src_fields).write.mode(
-        "error"
-    ).parquet(os.path.join(path, "summaries"))
+    the single-writer discipline with a lease."""
+    _MG_LEDGER.init(df, key_cols, value_col, path, lock, k=k)
 
 
 def mg_ledger_ingest(batch: DataFrame, path: str, lock=False) -> None:
@@ -291,67 +301,7 @@ def mg_ledger_ingest(batch: DataFrame, path: str, lock=False) -> None:
     O(batch), bounded output, no reads of prior state.  NOT
     replay-safe: single-writer discipline (the streaming twin adds the
     marker machinery); ``lock=`` enforces it with a lease."""
-    if lock:
-        from muller_spark.operators.aggregate import _writer_lease
-
-        with _writer_lease(path, lock):
-            return mg_ledger_ingest(batch, path)
-    import json
-    import os
-
-    from muller_spark.operators.aggregate import _recover_log_swap
-
-    spark = batch.sparkSession
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    keys = json.loads(meta["key_cols"])
-    src_fields = [batch.schema[c] for c in keys]
-    _recover_log_swap(os.path.join(path, "summaries"))
-    _mg_summary_frame(
-        batch, meta["value_col"], int(meta["k"]), keys, src_fields
-    ).write.mode("append").parquet(os.path.join(path, "summaries"))
-
-
-def _fold_summary_log(spark, path: str):
-    """Merge the summary log back to one summary per key (shared by
-    report and compaction).  The whole per-key history folds through
-    ONE ``_MG.merge_rows`` call — a single combine + at most one
-    decrement — so the fold is deterministic in the log's row multiset
-    (order-independent), which is what makes report-before ==
-    report-after-compaction exact."""
-    import json
-    import os
-
-    from muller_spark.operators.aggregate import _recover_log_swap
-
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    keys = json.loads(meta["key_cols"])
-    k = int(meta["k"])
-    _recover_log_swap(os.path.join(path, "summaries"))
-    # recursive lookup: streaming ingests land summary rows in batch-
-    # namespaced marker subdirectories beside the flat batch files
-    log = spark.read.option("recursiveFileLookup", "true").parquet(
-        os.path.join(path, "summaries")
-    )
-    src_fields = [log.schema[c] for c in keys]
-    merge_keys = keys if keys else ["_g"]
-    if not keys:
-        log = log.withColumn("_g", F.lit(0))
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        mg = _MG(k)
-        items = [None if pd.isna(i) else str(i) for i in pdf["item"]]
-        mg.merge_rows(items, pdf["cnt"], pdf["err"])
-        out = pd.DataFrame(mg.rows(), columns=["item", "cnt", "err"])
-        for i, c in enumerate(keys):
-            out.insert(i, c, pdf[c].iloc[0])
-        return out
-
-    folded = (
-        log.groupBy(*merge_keys)
-        .applyInPandas(merge_group, _partial_row_schema(src_fields))
-        .select(*keys, "item", "cnt", "err")
-    )
-    return folded, keys, k, src_fields
+    _MG_LEDGER.ingest(batch, path, lock)
 
 
 def mg_ledger_report(spark, path: str) -> DataFrame:
@@ -360,7 +310,7 @@ def mg_ledger_report(spark, path: str) -> DataFrame:
     report form ``(*key_cols, item, est_count, err_bound)`` — same
     columns, same guarantees, same exact-below-capacity regime, so
     the same oracle construction replays it."""
-    folded, keys, _, src_fields = _fold_summary_log(spark, path)
+    folded, keys, _ = _MG_LEDGER.read(spark, path)
     # the NULL-item sentinel row carries the fold's total decrement;
     # broadcast it onto the item rows as err_bound (per key)
     items = folded.where(F.col("item").isNotNull()).select(
@@ -384,24 +334,6 @@ def compact_mg_ledger(spark, path: str, lock=False) -> None:
     """Fold the summary log to one summary per key.  Reports before
     and after compaction are IDENTICAL — the report fold and the
     compaction fold are the same single merge over the same row
-    multiset.  Crash-safe swap + ``landed`` manifest preservation as
-    :func:`muller_spark.operators.aggregate.compact_agg_ledger` (same
-    marker crash class).  ``lock=`` enforces the
-    no-compact-while-ingesting discipline with a lease."""
-    import os
-
-    from muller_spark.operators.aggregate import (
-        _manifest_folded_batches,
-        _swap_log_dir,
-        _writer_lease,
-    )
-
-    if lock:
-        with _writer_lease(path, lock):
-            return compact_mg_ledger(spark, path)
-
-    _manifest_folded_batches(path, "summaries")
-    folded, _, _, _ = _fold_summary_log(spark, path)
-    sm_dir = os.path.join(path, "summaries")
-    folded.write.mode("overwrite").parquet(sm_dir + ".compact")
-    _swap_log_dir(sm_dir)
+    multiset.  ``lock=`` enforces the no-compact-while-ingesting
+    discipline with a lease."""
+    _MG_LEDGER.compact(spark, path, lock)

@@ -51,6 +51,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from muller_spark.operators.ledger import StatsLedger
+
 
 class _MRL:
     """Deterministic multi-level quantile summary (driver/executor-side
@@ -139,6 +141,51 @@ class _MRL:
         return out
 
 
+def _sketch_row_schema(src_fields) -> StructType:
+    """Sketch row form ``(*group_cols, level int, value double)``."""
+    return StructType(
+        list(src_fields)
+        + [
+            StructField("level", IntegerType(), False),
+            StructField("value", DoubleType(), False),
+        ]
+    )
+
+
+def _merge_sketches(
+    partials: DataFrame,
+    keys: "list[str]",
+    k: int,
+    src_fields,
+) -> DataFrame:
+    """Per-key MRL merge of sketch rows (concatenate levels, compact),
+    kept in the sketch row form — the second stage of
+    :func:`quantile_sketch` and the quantile ledger's fold."""
+    merge_keys = keys if keys else ["_g"]
+    if not keys:
+        # single global sketch: merge all partials in one group
+        partials = partials.withColumn("_g", F.lit(0))
+
+    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        sk = _MRL(k)
+        for lv in sorted(pdf["level"].unique()):
+            sk.add_level(
+                int(lv),
+                pdf.loc[pdf["level"] == lv, "value"].to_numpy(np.float64),
+            )
+        out = pd.DataFrame(list(sk.rows()), columns=["level", "value"])
+        for i, c in enumerate(keys):
+            out.insert(i, c, pdf[c].iloc[0])
+        out["level"] = out["level"].astype("int32")
+        return out
+
+    return (
+        partials.groupBy(*merge_keys)
+        .applyInPandas(merge_group, _sketch_row_schema(src_fields))
+        .select(*keys, "level", "value")
+    )
+
+
 def quantile_sketch(
     df: DataFrame,
     value_col: str,
@@ -161,13 +208,7 @@ def quantile_sketch(
     """
     gcols = list(group_cols)
     src_fields = [df.schema[c] for c in gcols]
-    out_schema = StructType(
-        src_fields
-        + [
-            StructField("level", IntegerType(), False),
-            StructField("value", DoubleType(), False),
-        ]
-    )
+    out_schema = _sketch_row_schema(src_fields)
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sketches: dict[tuple, _MRL] = {}
@@ -195,31 +236,7 @@ def quantile_sketch(
             yield out
 
     partials = df.select(*gcols, value_col).mapInPandas(partial, out_schema)
-    if not gcols:
-        # single global sketch: merge all partials in one group
-        partials = partials.withColumn("_g", F.lit(0))
-        merge_keys = ["_g"]
-    else:
-        merge_keys = gcols
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _MRL(k)
-        for lv in sorted(pdf["level"].unique()):
-            sk.add_level(
-                int(lv),
-                pdf.loc[pdf["level"] == lv, "value"].to_numpy(np.float64),
-            )
-        rows = list(sk.rows())
-        out = pd.DataFrame(rows, columns=["level", "value"])
-        for i, c in enumerate(gcols):
-            out.insert(i, c, pdf[c].iloc[0])
-        out["level"] = out["level"].astype("int32")
-        return out
-
-    merged = partials.groupBy(*merge_keys).applyInPandas(
-        merge_group, out_schema if gcols else StructType(out_schema.fields)
-    )
-    return merged.select(*gcols, "level", "value")
+    return _merge_sketches(partials, gcols, k, src_fields)
 
 
 def quantile_values(
@@ -291,6 +308,18 @@ def quantile_report(
 # family (scalars: agg ledger; distinct: HLL ledger; quantiles: this)
 # ---------------------------------------------------------------------------
 
+_QUANTILE_LEDGER = StatsLedger(
+    log="sketches",
+    meta_cols=("k",),
+    partials=lambda df, keys, meta: quantile_sketch(
+        df, meta["value_col"], group_cols=keys, k=int(meta["k"])
+    ),
+    fold=lambda log, keys, meta: _merge_sketches(
+        log, keys, int(meta["k"]), [log.schema[c] for c in keys]
+    ),
+)
+
+
 def init_quantile_ledger(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -307,34 +336,15 @@ def init_quantile_ledger(
     weighs 2^L); ``meta`` — one row pinning (key_cols, value_col, k).
     Sketches merge by concatenation + compaction (the MRL merge), so
     ingest = one bounded partial-sketch build of the batch appended to
-    the log — O(batch), zero reads of prior state.  UNLIKE the HLL
-    register log, sketch rows are weight-carrying: a replayed append
-    double-weights its batch, so the batch API shares the aggregate
-    ledger's single-writer discipline (a streaming twin would need its
-    marker construction, not the register ledger's nothing-at-all).
+    the log — O(batch), zero reads of prior state.  Sketch rows are
+    weight-carrying (a replayed append double-weights its batch):
+    crash class marker + landed manifest (``operators/ledger.py``).
 
     Report = per-key fold of the log (≤ keys × ingests × k·log n rows)
     + weighted-rank answers; exact while a key's total row count stays
     ≤ k, within the documented MRL rank-error bound after.  ``lock=``
-    enforces the single-writer discipline with a lease
-    (``operators.aggregate._writer_lease``)."""
-    if lock:
-        from muller_spark.operators.aggregate import _writer_lease
-
-        with _writer_lease(path, lock):
-            return init_quantile_ledger(df, key_cols, value_col, path, k=k)
-    import json
-    import os
-
-    spark = df.sparkSession
-    keys = list(key_cols)
-    spark.createDataFrame(
-        [(json.dumps(keys), value_col, int(k))],
-        "key_cols string, value_col string, k int",
-    ).write.mode("error").parquet(os.path.join(path, "meta"))
-    quantile_sketch(df, value_col, group_cols=keys, k=k).write.mode(
-        "error"
-    ).parquet(os.path.join(path, "sketches"))
+    enforces the single-writer discipline with a lease."""
+    _QUANTILE_LEDGER.init(df, key_cols, value_col, path, lock, k=k)
 
 
 def quantile_ledger_ingest(batch: DataFrame, path: str, lock=False) -> None:
@@ -342,67 +352,7 @@ def quantile_ledger_ingest(batch: DataFrame, path: str, lock=False) -> None:
     bounded sketch rows appended (grouping/k sniffed from meta).
     ``lock=`` opts into the enforced single-writer lease — a racing
     retry of the same batch double-weights it silently otherwise."""
-    if lock:
-        from muller_spark.operators.aggregate import _writer_lease
-
-        with _writer_lease(path, lock):
-            return quantile_ledger_ingest(batch, path)
-    import json
-    import os
-
-    from muller_spark.operators.aggregate import _recover_log_swap
-
-    spark = batch.sparkSession
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    keys = json.loads(meta["key_cols"])
-    _recover_log_swap(os.path.join(path, "sketches"))
-    quantile_sketch(
-        batch, meta["value_col"], group_cols=keys, k=meta["k"]
-    ).write.mode("append").parquet(os.path.join(path, "sketches"))
-
-
-def _fold_sketch_log(spark, path: str) -> "tuple[DataFrame, list, int]":
-    """Merge the sketch log back to one sketch per key (shared by
-    report and compaction)."""
-    import json
-    import os
-
-    from muller_spark.operators.aggregate import _recover_log_swap
-
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    keys = json.loads(meta["key_cols"])
-    k = int(meta["k"])
-    _recover_log_swap(os.path.join(path, "sketches"))
-    # recursive lookup: streaming ingests land sketch rows in batch-
-    # namespaced marker subdirectories beside the flat batch files
-    log = spark.read.option("recursiveFileLookup", "true").parquet(
-        os.path.join(path, "sketches")
-    )
-    src_fields = [log.schema[c] for c in keys]
-    out_schema = StructType(
-        src_fields
-        + [
-            StructField("level", IntegerType(), False),
-            StructField("value", DoubleType(), False),
-        ]
-    )
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _MRL(k)
-        for lv in sorted(pdf["level"].unique()):
-            sk.add_level(
-                int(lv),
-                pdf.loc[pdf["level"] == lv, "value"].to_numpy(np.float64),
-            )
-        rows = list(sk.rows())
-        out = pd.DataFrame(rows, columns=["level", "value"])
-        for i, c in enumerate(keys):
-            out.insert(i, c, pdf[c].iloc[0])
-        out["level"] = out["level"].astype("int32")
-        return out
-
-    folded = log.groupBy(*keys).applyInPandas(merge_group, out_schema)
-    return folded, keys, k
+    _QUANTILE_LEDGER.ingest(batch, path, lock)
 
 
 def quantile_ledger_report(
@@ -413,7 +363,7 @@ def quantile_ledger_report(
     """Per-key quantiles from the ledger: fold the sketch log per key,
     then weighted-rank answers — ``(*key_cols, q, value)``, same
     definition and float discipline as :func:`quantile_values`."""
-    folded, keys, _ = _fold_sketch_log(spark, path)
+    folded, keys, _ = _QUANTILE_LEDGER.read(spark, path)
     return quantile_values(folded, quantiles, group_cols=keys)
 
 
@@ -421,25 +371,6 @@ def compact_quantile_ledger(spark, path: str, lock=False) -> None:
     """Fold the sketch log to one sketch per key.  Post-compaction
     reports equal pre-compaction reports EXACTLY when no key has ever
     compacted (raw level-0 rows just concatenate), and stay within the
-    MRL bound otherwise.  Crash-safe swap + ``landed`` manifest
-    preservation exactly as :func:`muller_spark.operators.aggregate.
-    compact_agg_ledger` — same weight-carrying state algebra, same
-    stopped-stream-replay hazard, same fix.  ``lock=`` enforces the
+    MRL bound otherwise.  ``lock=`` enforces the
     no-compact-while-ingesting discipline with a lease."""
-    import os
-
-    from muller_spark.operators.aggregate import (
-        _manifest_folded_batches,
-        _swap_log_dir,
-        _writer_lease,
-    )
-
-    if lock:
-        with _writer_lease(path, lock):
-            return compact_quantile_ledger(spark, path)
-
-    _manifest_folded_batches(path, "sketches")
-    folded, _, _ = _fold_sketch_log(spark, path)
-    sk_dir = os.path.join(path, "sketches")
-    folded.write.mode("overwrite").parquet(sk_dir + ".compact")
-    _swap_log_dir(sk_dir)
+    _QUANTILE_LEDGER.compact(spark, path, lock)

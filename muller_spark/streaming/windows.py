@@ -14,6 +14,32 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def _start_foreach_batch(
+    stream: DataFrame,
+    make_land,
+    checkpoint_dir: str,
+    trigger_seconds: int,
+    available_now: bool,
+):
+    """Start a ``foreachBatch`` query: ``make_land(run_ns)`` builds the
+    batch handler, where ``run_ns`` is a hash of ``checkpoint_dir`` that
+    namespaces the handler's batch directories (micro-batch ids restart
+    at 0 for every fresh checkpoint, so two queries landing under one
+    path would otherwise collide on ``ingest_batch=0``).
+    ``available_now=True`` drains all available input then stops."""
+    import hashlib
+
+    run_ns = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]
+    writer = stream.writeStream.foreachBatch(make_land(run_ns)).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
+
+
 def stream_from_directory(
     spark: SparkSession,
     path: str,
@@ -117,11 +143,9 @@ def write_stream_to_dataset(stream: DataFrame, ds, checkpoint_dir: str, trigger_
     pattern as checkpointed ``ComputeFunction.eval``.  The handler is
     exposed as :func:`make_dataset_batch_handler` so the replay
     contract is directly testable."""
-    return (
-        stream.writeStream.foreachBatch(make_dataset_batch_handler(ds))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
+    return _start_foreach_batch(
+        stream, lambda _: make_dataset_batch_handler(ds), checkpoint_dir,
+        trigger_seconds, available_now=False,
     )
 
 
@@ -243,48 +267,39 @@ def ledger_dedup_stream(
     same history.
 
     foreachBatch serializes micro-batches, which satisfies the ledger's
-    single-writer contract.  Crash-safety per batch, in order:
-
-    1. survivors land in ``out_path/ingest_batch=<id>/`` (overwrite +
-       ``_SUCCESS`` marker → output is EXACTLY-once: a replay that sees
-       the marker never rewrites the directory);
-    2. the landed survivors' hashes append to the ledger — and a replay
-       that sees the marker RE-appends them, because a crash between
-       (1) and (2) is the one window where the ledger lags the output.
-       Duplicate hash rows in the ledger are harmless (it is read as an
-       anti-join set); compact with ``compact_dedup_ledger`` when churn
-       accumulates.
-
+    single-writer contract.  Crash class: heal-or-advance
+    (``operators/ledger.py``) — survivors land exactly once under
+    ``out_path/ingest_run=<ns>/ingest_batch=<id>/`` and keep their
+    ``content_hash`` column, so the hashes always (re-)append from the
+    landed parquet; duplicate hash rows are harmless (the ledger is
+    read as an anti-join set) — compact with ``compact_dedup_ledger``.
     The ledger must exist (``init_dedup_ledger``, possibly on an empty
-    frame).  Survivor rows keep their ``content_hash`` column so the
-    heal step re-reads hashes from the landed parquet, not the input.
+    frame).
 
-    Batch directories are namespaced by a hash of ``checkpoint_dir``:
-    micro-batch ids restart at 0 for every fresh checkpoint, so two
-    queries (or a restart after deleting the checkpoint) landing in the
-    same ``out_path`` would otherwise collide on ``ingest_batch=0`` and
-    skip real data.  Consequence: deleting the checkpoint but keeping
+    Batch directories are namespaced by a hash of ``checkpoint_dir``
+    (:func:`_start_foreach_batch`): deleting the checkpoint but keeping
     ``out_path`` is safe as long as the checkpoint path CHANGES; reusing
     the identical path string after deleting its contents resurrects
-    the old markers — use a new checkpoint dir instead.
-
-    ``available_now=True`` drains all available input then stops — the
-    batch-backfill trigger used by the tests."""
-    import hashlib
-
-    run_ns = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]
-    land = make_ledger_batch_handler(
-        text_col, ledger_path, out_path, run_ns,
-        normalize=normalize, keep_by=keep_by,
+    the old markers — use a new checkpoint dir instead."""
+    return _start_foreach_batch(
+        stream,
+        lambda run_ns: make_ledger_batch_handler(
+            text_col, ledger_path, out_path, run_ns,
+            normalize=normalize, keep_by=keep_by,
+        ),
+        checkpoint_dir, trigger_seconds, available_now,
     )
-    writer = stream.writeStream.foreachBatch(land).option(
-        "checkpointLocation", checkpoint_dir
+
+
+def _landed_output(spark, out_path: str, run_ns: str, batch_id: int):
+    """``(batch directory, whether its _SUCCESS marker exists)`` for a
+    heal-or-advance twin's exactly-once output under ``out_path``."""
+    batch_out = (
+        f"{out_path.rstrip('/')}/ingest_run={run_ns}/ingest_batch={batch_id}"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    marker = spark._jvm.org.apache.hadoop.fs.Path(batch_out + "/_SUCCESS")
+    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
+    return batch_out, fs.exists(marker)
 
 
 def make_ledger_batch_handler(
@@ -309,13 +324,8 @@ def make_ledger_batch_handler(
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_out = (
-            f"{out_path.rstrip('/')}/ingest_run={run_ns}/ingest_batch={batch_id}"
-        )
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path(batch_out + "/_SUCCESS")
-        fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        already_landed = fs.exists(jvm_path)
-        if not already_landed:
+        batch_out, done = _landed_output(spark, out_path, run_ns, batch_id)
+        if not done:
             if batch_df.filter(F.col(text_col).isNotNull()).isEmpty():
                 return
             ledger = spark.read.parquet(ledger_path)
@@ -351,26 +361,19 @@ def neardup_dedup_stream(
     hashed-shingle Jaccard ≥ ``threshold``; survivors land exactly-once
     under ``out_path`` and their bands + shingles append to the ledger
     so later batches (and batch ingest sharing the same ledger) see
-    them.  Same crash-safety ordering, marker skip, run namespacing,
-    and single-writer reasoning as the exact-hash stream; duplicate
-    ledger rows from a heal replay are decision-harmless (candidates
-    and dup ids are distinct-folded) — compact offline if churn
-    accumulates.  The ledger must exist (``init_neardup_ledger``,
-    possibly on an empty frame)."""
-    import hashlib
-
-    run_ns = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]
-    land = make_neardup_batch_handler(
-        text_col, id_col, ledger_path, out_path, run_ns, threshold=threshold,
+    them.  Crash class: heal-or-advance (``operators/ledger.py``) —
+    candidates and dup ids are distinct-folded, so replayed ledger rows
+    are decision-harmless; compact offline if churn accumulates.  The
+    ledger must exist (``init_neardup_ledger``, possibly on an empty
+    frame)."""
+    return _start_foreach_batch(
+        stream,
+        lambda run_ns: make_neardup_batch_handler(
+            text_col, id_col, ledger_path, out_path, run_ns,
+            threshold=threshold,
+        ),
+        checkpoint_dir, trigger_seconds, available_now,
     )
-    writer = stream.writeStream.foreachBatch(land).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def make_neardup_batch_handler(
@@ -400,12 +403,8 @@ def make_neardup_batch_handler(
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_out = (
-            f"{out_path.rstrip('/')}/ingest_run={run_ns}/ingest_batch={batch_id}"
-        )
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path(batch_out + "/_SUCCESS")
-        fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jvm_path):
+        batch_out, done = _landed_output(spark, out_path, run_ns, batch_id)
+        if not done:
             if batch_df.filter(F.col(text_col).isNotNull()).isEmpty():
                 return
             survivors = neardup_against_ledger(
@@ -455,31 +454,18 @@ def hamming_dedup_stream(
     SAME decision code as batch ingest, so stream and batch can never
     drift); survivors land exactly-once under ``out_path`` and their
     pigeonhole block postings append to the ledger so later batches
-    and batch ingest see them.
-
-    Same crash-safety contract as :func:`neardup_dedup_stream`:
-    ``_SUCCESS`` marker skip (a replay never rewrites landed output),
-    heal-or-advance (ledger append re-derived from the LANDED
-    survivors, so a crash between land and append heals on replay;
-    duplicate posting rows are decision-harmless because candidates
-    and dup ids are distinct-folded), run namespacing by checkpoint
-    hash, single-writer ledger discipline.  The ledger must exist
-    (``init_hamming_ledger``, possibly on an empty frame) — its meta
-    pins (max_hamming, nbits) so mixed-geometry state is impossible."""
-    import hashlib
-
-    run_ns = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]
-    land = make_hamming_batch_handler(
-        hash_col, id_col, ledger_path, out_path, run_ns
+    and batch ingest see them.  Crash class: heal-or-advance
+    (``operators/ledger.py``), as :func:`neardup_dedup_stream`.  The
+    ledger must exist (``init_hamming_ledger``, possibly on an empty
+    frame) — its meta pins (max_hamming, nbits) so mixed-geometry
+    state is impossible."""
+    return _start_foreach_batch(
+        stream,
+        lambda run_ns: make_hamming_batch_handler(
+            hash_col, id_col, ledger_path, out_path, run_ns
+        ),
+        checkpoint_dir, trigger_seconds, available_now,
     )
-    writer = stream.writeStream.foreachBatch(land).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def make_hamming_batch_handler(
@@ -501,15 +487,11 @@ def make_hamming_batch_handler(
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_out = (
-            f"{out_path.rstrip('/')}/ingest_run={run_ns}/ingest_batch={batch_id}"
-        )
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path(batch_out + "/_SUCCESS")
-        fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
+        batch_out, done = _landed_output(spark, out_path, run_ns, batch_id)
         fp = batch_df.select(
             F.col(id_col).alias("id"), F.col(hash_col).alias("dhash")
         )
-        if not fs.exists(jvm_path):
+        if not done:
             if fp.filter(F.col("dhash").isNotNull()).isEmpty():
                 return
             survivors = hamming_against_ledger(
@@ -547,28 +529,20 @@ def embedding_dedup_stream(
     ledger so later batches (and batch ingest sharing the same ledger)
     see them.  Completes the streaming ledger family's modality matrix
     next to the text (:func:`neardup_dedup_stream`) and media
-    (:func:`hamming_dedup_stream`) twins.  Same crash-safety ordering,
-    marker skip, run namespacing, and single-writer reasoning;
-    duplicate ledger rows from a heal replay are decision-harmless
-    (candidates and dup ids are distinct-folded).  The ledger must
+    (:func:`hamming_dedup_stream`) twins.  Crash class:
+    heal-or-advance (``operators/ledger.py``).  The ledger must
     exist (``init_embedding_ledger`` — on an empty frame pass ``dim=``).
     NULL-vector rows are DROPPED here (a poison row must not kill the
     stream); a wrong-width vector still raises, because silently
     bucketing corrupted geometry would poison every later verify."""
-    import hashlib
-
-    run_ns = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]
-    land = make_embedding_batch_handler(
-        vec_col, id_col, ledger_path, out_path, run_ns, threshold=threshold,
+    return _start_foreach_batch(
+        stream,
+        lambda run_ns: make_embedding_batch_handler(
+            vec_col, id_col, ledger_path, out_path, run_ns,
+            threshold=threshold,
+        ),
+        checkpoint_dir, trigger_seconds, available_now,
     )
-    writer = stream.writeStream.foreachBatch(land).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def make_embedding_batch_handler(
@@ -598,13 +572,9 @@ def make_embedding_batch_handler(
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_out = (
-            f"{out_path.rstrip('/')}/ingest_run={run_ns}/ingest_batch={batch_id}"
-        )
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path(batch_out + "/_SUCCESS")
-        fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
+        batch_out, done = _landed_output(spark, out_path, run_ns, batch_id)
         batch_df = batch_df.filter(F.col(vec_col).isNotNull())
-        if not fs.exists(jvm_path):
+        if not done:
             if batch_df.isEmpty():
                 return
             survivors = embedding_against_ledger(
@@ -662,41 +632,35 @@ def drift_monitor_stream(
     psi=NULL rather than 0.0 — "no signal" must not read as "no
     drift".  Bucket contributions sum in bucket order in Python so
     the headline PSI is bit-stable run-to-run."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
     from muller_spark.operators.quality import (
         psi_against_reference, psi_reference,
     )
 
     spark = ref_df.sparkSession
     ref_state = psi_reference(ref_df, value_col, buckets=buckets)
-    run_ns = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        rows = psi_against_reference(
-            batch_df, value_col, ref_state
-        ).collect()  # bounded: one row per bucket, already bucket-ordered
-        n = sum(r["cur_count"] for r in rows)
-        psi_val = (
-            round(sum(r["psi_contrib"] for r in rows), 6) if n > 0 else None
-        )
-        spark.createDataFrame(
-            [(int(batch_id), psi_val, int(n))],
-            "batch_id long, psi double, n_rows long",
-        ).write.mode("overwrite").parquet(
-            f"{out_path}/monitor_batch={run_ns}_{batch_id}"
-        )
+    def make_land(run_ns: str):
+        def land(batch_df: DataFrame, batch_id: int) -> None:
+            rows = psi_against_reference(
+                batch_df, value_col, ref_state
+            ).collect()  # bounded: one row per bucket, already bucket-ordered
+            n = sum(r["cur_count"] for r in rows)
+            psi_val = (
+                round(sum(r["psi_contrib"] for r in rows), 6)
+                if n > 0 else None
+            )
+            spark.createDataFrame(
+                [(int(batch_id), psi_val, int(n))],
+                "batch_id long, psi double, n_rows long",
+            ).write.mode("overwrite").parquet(
+                f"{out_path}/monitor_batch={run_ns}_{batch_id}"
+            )
 
-    writer = stream.writeStream.foreachBatch(land).option(
-        "checkpointLocation", checkpoint_dir
+        return land
+
+    return _start_foreach_batch(
+        stream, make_land, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def incremental_dedup_flow_stream(
@@ -734,20 +698,13 @@ def incremental_dedup_flow_stream(
     the ledger) — cluster state is monotone under the flow's
     semantics either way.  ``flow.init(seed)`` (or the two ledger init
     calls) must run before the stream starts."""
-    import hashlib
-
-    run_ns = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]
-    land = make_flow_batch_handler(
-        text_col, id_col, root, run_ns, threshold=threshold
+    return _start_foreach_batch(
+        stream,
+        lambda run_ns: make_flow_batch_handler(
+            text_col, id_col, root, run_ns, threshold=threshold
+        ),
+        checkpoint_dir, trigger_seconds, available_now,
     )
-    writer = stream.writeStream.foreachBatch(land).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def make_flow_batch_handler(
@@ -809,20 +766,13 @@ def semantic_dedup_flow_stream(
     (:func:`make_embedding_batch_handler`) — and the same documented
     replay nondeterminism for intra-batch mutual near-dups.
     ``flow.init(seed)`` must run before the stream starts."""
-    import hashlib
-
-    run_ns = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]
-    land = make_semantic_flow_batch_handler(
-        vec_col, id_col, root, run_ns, threshold=threshold
+    return _start_foreach_batch(
+        stream,
+        lambda run_ns: make_semantic_flow_batch_handler(
+            vec_col, id_col, root, run_ns, threshold=threshold
+        ),
+        checkpoint_dir, trigger_seconds, available_now,
     )
-    writer = stream.writeStream.foreachBatch(land).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def make_semantic_flow_batch_handler(
@@ -864,6 +814,43 @@ def make_semantic_flow_batch_handler(
     return land
 
 
+def _stats_ledger_batch_handler(family, ledger_path: str, run_ns: str):
+    """The marker + landed-manifest handler shared by the statistics
+    ledgers' stream twins (crash class in ``operators/ledger.py``):
+    each micro-batch's partial lands as the ``_SUCCESS``-marked
+    ``<log>/ingest_run=<ns>/ingest_batch=<id>`` subdirectory, then its
+    ``landed/<ns>_<id>`` entry is touched.  A replay that finds the
+    entry does nothing; one that finds only the marker (crash between
+    the two writes) records the entry without rewriting.  Grouping and
+    parameters come from the ledger meta, never the caller."""
+    import os as _os
+
+    def land(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        batch_dir = _os.path.join(
+            ledger_path,
+            family.log,
+            f"ingest_run={run_ns}",
+            f"ingest_batch={batch_id}",
+        )
+        hpath = spark._jvm.org.apache.hadoop.fs.Path
+        landed = hpath(
+            _os.path.join(ledger_path, "landed", f"{run_ns}_{batch_id}")
+        )
+        fs = landed.getFileSystem(spark._jsc.hadoopConfiguration())
+        if fs.exists(landed):
+            return  # replayed batch: manifest outlives compaction
+        if not fs.exists(hpath(batch_dir + "/_SUCCESS")):
+            keys, meta = family.load_meta(spark, ledger_path)
+            family.partials(batch_df, keys, meta).write.mode(
+                "overwrite"
+            ).parquet(batch_dir)
+        fs.mkdirs(landed.getParent())
+        fs.createNewFile(landed)
+
+    return land
+
+
 def agg_ledger_stream(
     stream: DataFrame,
     ledger_path: str,
@@ -875,97 +862,24 @@ def agg_ledger_stream(
     ledger (``operators/aggregate``) — materialized-view maintenance
     over a stream: each micro-batch folds to ONE partial-aggregate row
     per key (map-side, O(batch)) landed as a batch-namespaced
-    subdirectory of the ledger's partial log.
-
-    Crash-safety differs from the dedup/near-dup/Hamming stream twins
-    on purpose: aggregate partials are NOT duplicate-tolerant (a
-    re-appended posting row is decision-harmless, a re-appended partial
-    DOUBLE-COUNTS), so instead of heal-or-advance this handler is
-    single-artifact exactly-once — the partial subdir itself carries
-    the ``_SUCCESS`` marker, a replayed batch that sees the marker does
-    nothing, and a crash mid-write leaves no committed files for
-    :func:`agg_ledger_report`'s recursive read to see.  A second,
-    compaction-surviving guard — the ``landed`` manifest — makes it
-    safe to compact a STOPPED stream's state and restart it even when
-    the final micro-batch landed without its checkpoint commit (see
-    :func:`make_agg_ledger_batch_handler`).  Grouping is sniffed from
-    the ledger meta (never caller-supplied), and the single-writer
-    discipline still forbids compacting while a run is LIVE (a batch
-    between its partial write and its manifest write would lose the
-    race with the fold).  Run-namespaced by checkpoint hash like the
-    other
-    twins: re-using an out path with a FRESH checkpoint dir cannot
-    collide with old batch dirs."""
-    import hashlib
-
-    run_ns = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]
-    land = make_agg_ledger_batch_handler(ledger_path, run_ns)
-    writer = stream.writeStream.foreachBatch(land).option(
-        "checkpointLocation", checkpoint_dir
+    subdirectory of the ledger's partial log.  Partials are NOT
+    duplicate-tolerant, so this twin takes the marker + landed
+    manifest crash class (``operators/ledger.py``) instead of the
+    dedup twins' heal-or-advance."""
+    return _start_foreach_batch(
+        stream,
+        lambda run_ns: make_agg_ledger_batch_handler(ledger_path, run_ns),
+        checkpoint_dir, trigger_seconds, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def make_agg_ledger_batch_handler(ledger_path: str, run_ns: str):
     """foreachBatch handler behind :func:`agg_ledger_stream`, exposed
-    for the crash-replay contract test (mirrors
-    :func:`make_hamming_batch_handler`).
+    for the crash-replay contract test (:func:`_stats_ledger_batch_handler`
+    over the aggregate ledger)."""
+    from muller_spark.operators.aggregate import _AGG_LEDGER
 
-    Two replay guards, because partials are NOT duplicate-tolerant:
-
-    - the batch subdir's own parquet ``_SUCCESS`` marker (primary,
-      free — but compaction folds subdirs into flat files and drops
-      it);
-    - a ``landed`` manifest (``<ledger>/landed/<run>_<batch>`` touch
-      files) that compaction PRESERVES, written after the partial
-      commits — so a stream stopped between its final partial write
-      and its checkpoint commit can be compacted and restarted without
-      double-counting that batch.  A crash between the partial write
-      and the manifest write heals on replay: the marker still
-      exists, so the handler skips the rewrite and records the
-      manifest entry (heal-or-advance).  If compaction runs BEFORE
-      that replay (stopped stream), it manifests every committed
-      batch subdir it folds
-      (``operators.aggregate._manifest_folded_batches``), so the
-      marker-compacted-away + no-manifest double-count window cannot
-      occur either."""
-    import json as _json
-    import os as _os
-
-    from muller_spark.operators.aggregate import _agg_partials
-
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_dir = _os.path.join(
-            ledger_path,
-            "partials",
-            f"ingest_run={run_ns}",
-            f"ingest_batch={batch_id}",
-        )
-        hpath = spark._jvm.org.apache.hadoop.fs.Path
-        landed = hpath(
-            _os.path.join(ledger_path, "landed", f"{run_ns}_{batch_id}")
-        )
-        fs = landed.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(landed):
-            return  # replayed batch: manifest outlives compaction
-        marker = hpath(batch_dir + "/_SUCCESS")
-        if not fs.exists(marker):
-            meta = spark.read.parquet(
-                _os.path.join(ledger_path, "meta")
-            ).first()
-            keys = _json.loads(meta["key_cols"])
-            _agg_partials(batch_df, keys, meta["value_col"]).write.mode(
-                "overwrite"
-            ).parquet(batch_dir)
-        fs.mkdirs(landed.getParent())
-        fs.createNewFile(landed)
-
-    return land
+    return _stats_ledger_batch_handler(_AGG_LEDGER, ledger_path, run_ns)
 
 
 def quantile_ledger_stream(
@@ -977,69 +891,23 @@ def quantile_ledger_stream(
 ):
     """Restart-durable streaming ingest into the incremental QUANTILE
     ledger (``operators/quantiles``) — per-key percentile state
-    maintained over a stream.  Same crash-safety class as
-    :func:`agg_ledger_stream`, for the same reason: sketch rows are
-    weight-carrying (a replayed append double-weights its batch), so
-    the handler is single-artifact exactly-once — each micro-batch's
-    own bounded MRL sketch lands as a marker-guarded subdirectory of
-    the sketch log, and a replayed batch that sees the marker does
-    nothing.  Grouping and k sniffed from the ledger meta; compaction
-    remains a stop-the-stream operation (single-writer discipline)."""
-    import hashlib
-
-    run_ns = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]
-    land = make_quantile_ledger_batch_handler(ledger_path, run_ns)
-    writer = stream.writeStream.foreachBatch(land).option(
-        "checkpointLocation", checkpoint_dir
+    maintained over a stream.  Sketch rows are weight-carrying, so the
+    crash class is :func:`agg_ledger_stream`'s: each micro-batch's own
+    bounded MRL sketch lands as a marker-guarded subdirectory of the
+    sketch log."""
+    return _start_foreach_batch(
+        stream,
+        lambda run_ns: make_quantile_ledger_batch_handler(ledger_path, run_ns),
+        checkpoint_dir, trigger_seconds, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def make_quantile_ledger_batch_handler(ledger_path: str, run_ns: str):
     """foreachBatch handler behind :func:`quantile_ledger_stream`,
-    exposed for the crash-replay contract test.  Same two-level replay
-    guard as :func:`make_agg_ledger_batch_handler` — batch-subdir
-    ``_SUCCESS`` marker plus the compaction-surviving ``landed``
-    manifest — because sketch rows are weight-carrying and a
-    replayed append double-weights its batch."""
-    import json as _json
-    import os as _os
+    exposed for the crash-replay contract test."""
+    from muller_spark.operators.quantiles import _QUANTILE_LEDGER
 
-    from muller_spark.operators.quantiles import quantile_sketch
-
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_dir = _os.path.join(
-            ledger_path,
-            "sketches",
-            f"ingest_run={run_ns}",
-            f"ingest_batch={batch_id}",
-        )
-        hpath = spark._jvm.org.apache.hadoop.fs.Path
-        landed = hpath(
-            _os.path.join(ledger_path, "landed", f"{run_ns}_{batch_id}")
-        )
-        fs = landed.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(landed):
-            return  # replayed batch: manifest outlives compaction
-        marker = hpath(batch_dir + "/_SUCCESS")
-        if not fs.exists(marker):
-            meta = spark.read.parquet(
-                _os.path.join(ledger_path, "meta")
-            ).first()
-            keys = _json.loads(meta["key_cols"])
-            quantile_sketch(
-                batch_df, meta["value_col"], group_cols=keys,
-                k=int(meta["k"]),
-            ).write.mode("overwrite").parquet(batch_dir)
-        fs.mkdirs(landed.getParent())
-        fs.createNewFile(landed)
-
-    return land
+    return _stats_ledger_batch_handler(_QUANTILE_LEDGER, ledger_path, run_ns)
 
 
 def mg_ledger_stream(
@@ -1051,71 +919,23 @@ def mg_ledger_stream(
 ):
     """Restart-durable streaming ingest into the incremental
     HEAVY-HITTERS ledger (``operators/heavyhitters``) — per-key top-k
-    state maintained over a stream, completing the streaming side of
-    the ledger family.  Same crash-safety class as
-    :func:`agg_ledger_stream`, for the same reason: Misra–Gries
-    summaries are mergeable but NOT replay-tolerant (a re-appended
-    summary double-counts its batch), so the handler is
-    single-artifact exactly-once — each micro-batch's own merged
-    summary lands as a marker-guarded subdirectory of the summary log,
-    with the compaction-surviving ``landed`` manifest as the second
-    guard.  Grouping and k sniffed from the ledger meta; compaction
-    remains a stop-the-stream operation (single-writer discipline)."""
-    import hashlib
-
-    run_ns = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]
-    land = make_mg_ledger_batch_handler(ledger_path, run_ns)
-    writer = stream.writeStream.foreachBatch(land).option(
-        "checkpointLocation", checkpoint_dir
+    state maintained over a stream.  Misra–Gries summaries are
+    mergeable but NOT replay-tolerant, so the crash class is
+    :func:`agg_ledger_stream`'s: each micro-batch's own merged summary
+    lands as a marker-guarded subdirectory of the summary log."""
+    return _start_foreach_batch(
+        stream,
+        lambda run_ns: make_mg_ledger_batch_handler(ledger_path, run_ns),
+        checkpoint_dir, trigger_seconds, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def make_mg_ledger_batch_handler(ledger_path: str, run_ns: str):
     """foreachBatch handler behind :func:`mg_ledger_stream`, exposed
-    for the crash-replay contract test.  Same two-level replay guard
-    as :func:`make_agg_ledger_batch_handler` — batch-subdir
-    ``_SUCCESS`` marker plus the compaction-surviving ``landed``
-    manifest."""
-    import json as _json
-    import os as _os
+    for the crash-replay contract test."""
+    from muller_spark.operators.heavyhitters import _MG_LEDGER
 
-    from muller_spark.operators.heavyhitters import _mg_summary_frame
-
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_dir = _os.path.join(
-            ledger_path,
-            "summaries",
-            f"ingest_run={run_ns}",
-            f"ingest_batch={batch_id}",
-        )
-        hpath = spark._jvm.org.apache.hadoop.fs.Path
-        landed = hpath(
-            _os.path.join(ledger_path, "landed", f"{run_ns}_{batch_id}")
-        )
-        fs = landed.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(landed):
-            return  # replayed batch: manifest outlives compaction
-        marker = hpath(batch_dir + "/_SUCCESS")
-        if not fs.exists(marker):
-            meta = spark.read.parquet(
-                _os.path.join(ledger_path, "meta")
-            ).first()
-            keys = _json.loads(meta["key_cols"])
-            src_fields = [batch_df.schema[c] for c in keys]
-            _mg_summary_frame(
-                batch_df, meta["value_col"], int(meta["k"]), keys,
-                src_fields,
-            ).write.mode("overwrite").parquet(batch_dir)
-        fs.mkdirs(landed.getParent())
-        fs.createNewFile(landed)
-
-    return land
+    return _stats_ledger_batch_handler(_MG_LEDGER, ledger_path, run_ns)
 
 
 def components_ledger_stream(
@@ -1130,13 +950,10 @@ def components_ledger_stream(
     """Restart-durable streaming ingest into the incremental
     CONNECTED-COMPONENTS ledger (``operators/components``): each
     micro-batch of candidate-pair edges folds into the persisted star
-    forest in O(affected).  This twin needs NO marker or manifest
-    machinery at all — component merging is a join-semilattice, so a
-    replayed batch maps every edge to endpoints that already share a
-    root and the ingest is a no-op (the HLL ledger's crash class), and
-    the one internal ordered window (labels appended, remaps not yet
-    swapped) heals on exactly the replay Structured Streaming
-    guarantees.  Composes with the near-dup ledger streams: their
+    forest in O(affected).  Crash class: no guard
+    (``operators/ledger.py``, see :func:`muller_spark.operators.
+    components.init_components_ledger`), so the twin is a plain
+    per-batch ingest.  Composes with the near-dup ledger streams: their
     landed survivor pairs are this stream's edges — ingest →
     candidate pairs → cluster maintenance, all O(batch)."""
     from muller_spark.operators.components import components_ledger_ingest
@@ -1144,11 +961,7 @@ def components_ledger_stream(
     def land(batch_df: DataFrame, batch_id: int) -> None:
         components_ledger_ingest(batch_df, ledger_path, src=src, dst=dst)
 
-    writer = stream.writeStream.foreachBatch(land).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        stream, lambda _: land, checkpoint_dir, trigger_seconds,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -236,7 +236,7 @@ def test_recover_log_swap_finishes_interrupted_compaction(spark, tmp_path):
     must self-heal instead of failing on a missing path."""
     import shutil
 
-    from muller_spark.operators.aggregate import _recover_log_swap  # noqa: F401
+    from muller_spark.operators.ledger import _recover_log_swap  # noqa: F401
 
     ledger = os.path.join(str(tmp_path), "ledger")
     init_agg_ledger(

@@ -235,7 +235,7 @@ def test_components_ledger_crash_window_heals(spark, tmp_path, monkeypatch):
     the batch heals it — the contract the streaming twin rides."""
     import os
 
-    import muller_spark.operators.aggregate as agg_mod
+    import muller_spark.operators.components as comp_mod
     from muller_spark.operators.components import (
         components_ledger_ingest,
         init_components_ledger,
@@ -249,15 +249,15 @@ def test_components_ledger_crash_window_heals(spark, tmp_path, monkeypatch):
     batch = spark.createDataFrame(
         [(20, 10), (1, 10)], "src long, dst long"
     )
-    real_swap = agg_mod._swap_log_dir
+    real_swap = comp_mod._swap_log_dir
 
     def boom(live_dir):
         raise RuntimeError("simulated crash before remap swap")
 
-    monkeypatch.setattr(agg_mod, "_swap_log_dir", boom)
+    monkeypatch.setattr(comp_mod, "_swap_log_dir", boom)
     with pytest.raises(RuntimeError, match="simulated"):
         components_ledger_ingest(batch, path)
-    monkeypatch.setattr(agg_mod, "_swap_log_dir", real_swap)
+    monkeypatch.setattr(comp_mod, "_swap_log_dir", real_swap)
     components_ledger_ingest(batch, path)  # the replay heals
     assert _ledger_report(spark, path) == {
         0: 0, 1: 0, 10: 0, 11: 0, 20: 0

@@ -242,7 +242,7 @@ def test_empty_init_requires_dim(spark, tmp_path):
 def test_lock_blocks_concurrent_writer(spark, corpus, tmp_path):
     """lock=True enforces the single-writer discipline with the
     ledger's lease (round-12 contract shared across the family)."""
-    from muller_spark.operators.aggregate import _writer_lease
+    from muller_spark.operators.ledger import _writer_lease
     from muller_spark.versioning.locks import BranchLockedError
 
     ids, mat = corpus
@@ -471,7 +471,7 @@ def test_compact_crash_heals_on_next_read(spark, corpus, tmp_path):
 
 
 def test_compact_lock_blocks_concurrent_writer(spark, corpus, tmp_path):
-    from muller_spark.operators.aggregate import _writer_lease
+    from muller_spark.operators.ledger import _writer_lease
     from muller_spark.operators.dedup import compact_embedding_ledger
     from muller_spark.versioning.locks import BranchLockedError
 

@@ -76,6 +76,8 @@ _RECENTLY_TOUCHED = {
     "q_hll_by_group", "q_knn_join", "q_decontamination",
     "q_contamination_severity", "q_resample_linear", "q_bigram_logprob",
     "q_neardup_ledger", "q_curation_pipeline",
+    "q_agg_ledger", "q_hll_ledger", "q_mg_ledger", "q_quantile_ledger",
+    "q_quantile_compacted", "q_hamming_ledger",
 }
 _ORACLE_SMOKE = set(sorted(_QUERIES)[::4]) | (
     _RECENTLY_TOUCHED & set(_QUERIES)

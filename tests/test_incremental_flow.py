@@ -179,11 +179,12 @@ def test_incremental_dedup_flow_facade_matches_handwired(spark, tmp_path):
 
 
 def test_incremental_dedup_flow_facade_with_lock(spark, tmp_path):
-    """lock= reaches every mutation in the chain: a held lease refuses
-    the cluster ingest inside flow.ingest()."""
+    """lock= reaches every mutation in the chain: a held lease on either
+    ledger refuses flow.ingest() and leaves both ledgers untouched, and
+    a held near-dup lease refuses flow.init()."""
     import pytest
 
-    from muller_spark.operators.aggregate import _writer_lease
+    from muller_spark.operators.ledger import _writer_lease
     from muller_spark.operators.flow import IncrementalDedupFlow
     from muller_spark.versioning.locks import BranchLockedError
 
@@ -201,8 +202,31 @@ def test_incremental_dedup_flow_facade_with_lock(spark, tmp_path):
     with _writer_lease(flow.clusters_path, {"owner": "other"}):
         with pytest.raises(BranchLockedError):
             flow.ingest(frame([(0, 1)]))
+
+    def shingle_ids():
+        return sorted(
+            r["id"] for r in spark.read.parquet(
+                os.path.join(flow.neardup_path, "shingles")
+            ).collect()
+        )
+
+    with _writer_lease(flow.neardup_path, {"owner": "other"}):
+        with pytest.raises(BranchLockedError):
+            flow.ingest(frame([(1, 0)]))
+    assert shingle_ids() == [0]
+    assert flow.labels().count() == 0
     flow.ingest(frame([(0, 1)]))  # released: proceeds
     assert {r["id"] for r in flow.labels().collect()} == {0, 1}
+
+    other = IncrementalDedupFlow(
+        os.path.join(str(tmp_path), "flowl2"), "text", "doc_id",
+        threshold=0.5, lock=True,
+    )
+    with _writer_lease(other.neardup_path, {"owner": "other"}):
+        with pytest.raises(BranchLockedError):
+            other.init(frame([(0, 0)]))
+    assert not os.path.exists(os.path.join(other.neardup_path, "meta"))
+    assert not os.path.exists(other.clusters_path)
 
 
 def test_incremental_dedup_flow_stream_twin(spark, tmp_path):

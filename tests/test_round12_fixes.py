@@ -378,12 +378,12 @@ def test_agg_ledger_lock_blocks_concurrent_writer(spark, tmp_path):
     enforced lease: a second writer raises BranchLockedError instead
     of silently double-counting (the scheduler-retry failure)."""
     from muller_spark.operators.aggregate import (
-        _writer_lease,
         agg_ledger_ingest,
         agg_ledger_report,
         compact_agg_ledger,
         init_agg_ledger,
     )
+    from muller_spark.operators.ledger import _writer_lease
     from muller_spark.versioning.locks import BranchLockedError
 
     ledger = os.path.join(str(tmp_path), "locked")
@@ -419,7 +419,7 @@ def test_all_ledger_families_enforce_the_lease(spark, tmp_path):
     """Every ledger family's mutators (init shown at setup, then
     ingest + compact) refuse to run while another writer holds the
     ledger lease."""
-    from muller_spark.operators.aggregate import _writer_lease
+    from muller_spark.operators.ledger import _writer_lease
     from muller_spark.operators.components import (
         compact_components_ledger,
         components_ledger_ingest,
@@ -471,6 +471,34 @@ def test_all_ledger_families_enforce_the_lease(spark, tmp_path):
                 compact()
         ingest()   # released: proceeds
         compact()
+
+    # the posting-log ledgers' only lock= mutator is their compaction
+    from muller_spark.operators.dedup import (
+        compact_hamming_ledger,
+        compact_neardup_ledger,
+        init_hamming_ledger,
+        init_neardup_ledger,
+    )
+
+    n = os.path.join(str(tmp_path), "nd")
+    init_neardup_ledger(
+        spark.createDataFrame(
+            [(1, "a b c d e f")], "doc_id long, text string"
+        ),
+        "text", "doc_id", n, num_hashes=8, bands=4,
+    )
+    h = os.path.join(str(tmp_path), "hm")
+    init_hamming_ledger(
+        spark.createDataFrame([(1, 12345)], "id long, dhash long"), h,
+    )
+    for path, compact in [
+        (n, lambda: compact_neardup_ledger(spark, n, lock=True)),
+        (h, lambda: compact_hamming_ledger(spark, h, lock=True)),
+    ]:
+        with _writer_lease(path, {"owner": "other"}):
+            with pytest.raises(BranchLockedError):
+                compact()
+        compact()  # released: proceeds
 
 
 # ------------------------------------- 7. bench outlier re-measure pass

@@ -76,6 +76,38 @@ def test_typo_match_matches_bruteforce(spark, tmp_path, query, d):
     assert got == _brute(CORPUS, query.lower().split(), d)
 
 
+@pytest.mark.parametrize("n_tokens", [63, 64])
+def test_typo_match_many_distinct_tokens(spark, tmp_path, n_tokens):
+    """AND-of-tokens stays exact at and past the 63-bit mask width: 64
+    distinct query tokens would overflow the long bitmask, so the
+    search falls back to counting covered tokens."""
+    letters = "bcdfghjklmnpqrstvwxz"
+    # pairwise Levenshtein >= 3, so no vocabulary token stands in for
+    # another at max_edits=1
+    vocab = [
+        (letters[i // 10] + letters[10 + i % 10]) * 3
+        for i in range(n_tokens)
+    ]
+    corpus = [
+        " ".join(vocab),                    # every token
+        " ".join(vocab[:-1]),               # one token short
+        " ".join([vocab[0][1:] + "a"] + vocab[1:]),  # query token 0 at d=1
+    ]
+    df = spark.createDataFrame(
+        list(enumerate(corpus)), "_row_id long, text string"
+    )
+    idx = InvertedIndex.build(
+        df, "text", os.path.join(str(tmp_path), "idx"), typo_keys=1
+    )
+    query = [vocab[0][1:]] + vocab[1:]  # a deletion typo in the first
+    want = _brute(corpus, query, 1)
+    assert want == {0, 2}
+    got = {r["id"] for r in idx.search(
+        " ".join(query), "typo_match", max_edits=1
+    ).collect()}
+    assert got == want
+
+
 def test_typo_match_default_depth_and_guards(spark, tmp_path):
     idx = _build(spark, tmp_path, typo_keys=1)
     # default max_edits = key-table depth
