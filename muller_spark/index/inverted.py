@@ -664,26 +664,28 @@ class InvertedIndex:
         # no job is scheduled to learn which shards to read
         shard_vals = sorted({shard_of(k, num_shards) for _, k in probe_rows})
         keys = self._typo_keys()
-        # no distinct here (round 13): the (qt, term) dedup runs on the
+        # no distinct on the warm path: the (qt, term) dedup runs on the
         # driver below — the distinct's exchange was a whole AQE stage
-        # job on the warm path for rows the collect dedups anyway.  The
-        # candidate cap now counts pre-dedup rows (a term contributes
-        # once per shared deletion key, a small constant) — it is a
-        # loud OOM guard, and triggering marginally earlier is the safe
-        # direction.
+        # job for rows the collect dedups anyway.  A pair repeats once
+        # per shared deletion key (~300 rows at d=2), so the raw rows
+        # overflow the cap long before the distinct pairs do: only an
+        # overflow recounts distinct pairs, and only that count decides
+        # the raise.  Either collect holds at most cap + 1 rows.
         cand = (
             keys.filter(F.col("kshard").isin(shard_vals))
             .join(F.broadcast(probes), "k")
             .select("qt", "term")
             .where(F.levenshtein(F.col("term"), F.col("qt")) <= d)
         )
-        cand_rows = cand.limit(self._TYPO_CANDIDATE_CAP + 1).collect()
-        if len(cand_rows) > self._TYPO_CANDIDATE_CAP:
+        cap = self._TYPO_CANDIDATE_CAP
+        cand_rows = cand.limit(cap + 1).collect()
+        if len(cand_rows) > cap:
+            cand_rows = cand.distinct().limit(cap + 1).collect()
+        if len(cand_rows) > cap:
             raise MullerSparkError(
-                f"typo_match candidate set exceeds "
-                f"{self._TYPO_CANDIDATE_CAP} (query tokens too "
-                "short/dense for this vocabulary); tighten the query or "
-                "lower max_edits"
+                f"typo_match candidate set exceeds {cap} distinct (token, "
+                "term) pairs (query tokens too short/dense for this "
+                "vocabulary); tighten the query or lower max_edits"
             )
         per_qt: dict = {}
         for r in cand_rows:

@@ -135,6 +135,43 @@ def connected_components(
     min-label algorithm's worst case — contract exponentially (a
     diameter-10 000 chain converges in ~15 rounds, not 10 000).
     """
+    return _forest_labels(_star_forest(edges, src, dst, max_rounds)[0])
+
+
+def _release_checkpoint(*frames: DataFrame) -> None:
+    """Drop the blocks of ``localCheckpoint``-ed frames that nothing
+    reads any more.  A checkpoint has no DataFrame-level unpersist (its
+    blocks belong to the RDD under the frame's ``LogicalRDD``), so
+    without this they stay pinned until a JVM GC lets the context
+    cleaner find them."""
+    for df in frames:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _forest_labels(forest: DataFrame) -> DataFrame:
+    """``(id, component)`` of a min-rooted star forest: non-roots appear
+    only on the large side (u), roots only on the small side (v)."""
+    leaves = forest.select(
+        F.col("u").alias("id"), F.col("v").alias("component")
+    )
+    roots = (
+        forest.select(F.col("v").alias("id"))
+        .distinct()
+        .withColumn("component", F.col("id"))
+    )
+    return leaves.union(roots)
+
+
+def _star_forest(
+    edges: DataFrame, src: str, dst: str, max_rounds: int
+) -> "tuple[DataFrame, int]":
+    """The converged, checkpointed star forest ``(u, v)`` of
+    :func:`connected_components` plus the number of canonical
+    (deduplicated, self-loop-free) input edges, which its first
+    fingerprint counts anyway — callers decide emptiness from it
+    instead of probing the edge plan with another action.  Superseded
+    rounds are released as the loop goes; the returned forest is the
+    caller's to release."""
     # lazy checkpoint: the initial fingerprint below materializes it,
     # so setup is one scheduled job instead of three (eager checkpoint
     # + take(1) emptiness probe + fingerprint)
@@ -159,10 +196,9 @@ def connected_components(
         )
 
     prev = _stats(cur)
-    if not prev[0]:  # empty edge set: no components
-        return cur.select(
-            F.col("u").alias("id"), F.col("v").alias("component")
-        )
+    n_edges = prev[0]
+    if not n_edges:  # empty edge set: no components
+        return cur, 0
     converged = False
     # Round-13 NEGATIVE results (kept as documentation, guide §1):
     # (a) folding TWO star rounds per checkpoint + fingerprint cycle
@@ -185,27 +221,19 @@ def connected_components(
         # count
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
         stats = _stats(nxt)
-        if stats == prev and nxt.subtract(cur).count() == 0:
-            cur = nxt
-            converged = True
+        converged = stats == prev and nxt.subtract(cur).count() == 0
+        # nxt is materialized and its lineage cut: cur is superseded
+        _release_checkpoint(cur)
+        prev, cur = stats, nxt
+        if converged:
             break
-        prev = stats
-        cur = nxt
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_rounds} "
             "large-star/small-star rounds — theoretically impossible "
             "below 2^max_rounds nodes; raise max_rounds"
         )
-    # fixed point is a min-rooted star forest: non-roots appear only on
-    # the large side (u), roots only on the small side (v)
-    leaves = cur.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    roots = (
-        cur.select(F.col("v").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-    )
-    return leaves.union(roots)
+    return cur, n_edges
 
 
 # ---------------------------------------------------------------------------
@@ -425,115 +453,123 @@ def components_ledger_ingest(
                     "silently fork labels — cast the batch explicitly"
                 )
         delta = _canonical(batch).localCheckpoint()
-        nodes = (
-            delta.select(F.col("u").alias("id"))
-            .union(delta.select(F.col("v").alias("id")))
-            .distinct()
-        )
-        # bucket-pruned lookup: ≤ min(|nodes|, buckets) partition dirs read.
-        # ONE job decides emptiness AND the bucket list (bounded driver
-        # state: ≤ `buckets` ints)
-        hit = sorted(
-            r[0]
-            for r in nodes.select(
-                _bucket_expr("id", buckets).alias("b")
-            ).distinct().collect()
-        )
-        if not hit:
-            return  # empty batch after self-loop/dedup canonicalization
+        pins = [delta]  # every checkpoint below is released on exit
+        try:
+            nodes = (
+                delta.select(F.col("u").alias("id"))
+                .union(delta.select(F.col("v").alias("id")))
+                .distinct()
+            )
+            # bucket-pruned lookup: ≤ min(|nodes|, buckets) partition dirs
+            # read.  ONE job decides emptiness AND the bucket list (bounded
+            # driver state: ≤ `buckets` ints)
+            hit = sorted(
+                r[0]
+                for r in nodes.select(
+                    _bucket_expr("id", buckets).alias("b")
+                ).distinct().collect()
+            )
+            if not hit:
+                return  # empty batch after self-loop/dedup canonicalization
 
-        _recover_log_swap(os.path.join(path, "remaps"))
-        labels_sub = (
-            _read_labels(spark, path)
-            .where(F.col("bucket").isin(hit))
-            .select("id", "component")
-        )
-        remaps = _remaps_df(spark, path)
-        resolved = (
-            nodes.join(labels_sub, "id", "left")
-            .join(
-                remaps,
-                F.col("component") == remaps["old_root"],
-                "left",
+            _recover_log_swap(os.path.join(path, "remaps"))
+            labels_sub = (
+                _read_labels(spark, path)
+                .where(F.col("bucket").isin(hit))
+                .select("id", "component")
             )
-            # unseen id → its own root (new node)
-            .select(
-                "id",
-                F.coalesce("root", "component", "id").alias("cur_root"),
-            )
-            .localCheckpoint()
-        )
-        reduced = (
-            delta.join(resolved.withColumnRenamed("id", "u"), "u")
-            .withColumnRenamed("cur_root", "ru")
-            .join(resolved.withColumnRenamed("id", "v"), "v")
-            .withColumnRenamed("cur_root", "rv")
-            .select(F.col("ru").alias("src"), F.col("rv").alias("dst"))
-            .where(F.col("src") != F.col("dst"))
-        )
-        new_nodes = resolved.where(F.col("cur_root") == F.col("id")).join(
-            labels_sub.select("id"), "id", "left_anti"
-        ).select("id")
-        if reduced.take(1):
-            # no extra checkpoint: connected_components' own fixed point is
-            # already checkpointed; its output is two cheap projections
-            m = connected_components(reduced, max_rounds=max_rounds)
-        else:
-            m = None
-
-        # 4. label rows for new ids: their reduced-CC component, or (for a
-        # new id whose every edge collapsed — only possible on a healing
-        # replay, where it already resolves through nothing) itself
-        if m is not None:
-            new_labels = (
-                new_nodes.join(m, "id", "left")
-                .select(
-                    "id", F.coalesce("component", "id").alias("component")
-                )
-            )
-        else:
-            new_labels = new_nodes.select(
-                "id", F.col("id").alias("component")
-            )
-        (
-            new_labels.withColumn("bucket", _bucket_expr("id", buckets))
-            .repartition(F.col("bucket"))  # one file per touched bucket
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(os.path.join(path, "labels"))
-        )
-
-        # 5. remap rewrite: demoted EXISTING roots (identity rows excluded;
-        # new ids live in labels, not remaps) + re-resolve old entries
-        if m is not None:
-            demoted = (
-                m.where(F.col("id") != F.col("component"))
-                .join(new_nodes.withColumnRenamed("id", "_n"),
-                      F.col("id") == F.col("_n"), "left_anti")
-                .select(
-                    F.col("id").alias("old_root"),
-                    F.col("component").alias("root"),
-                )
-            )
-            refreshed = (
-                remaps.alias("r")
+            remaps = _remaps_df(spark, path)
+            resolved = (
+                nodes.join(labels_sub, "id", "left")
                 .join(
-                    m.alias("m2"),
-                    F.col("r.root") == F.col("m2.id"),
+                    remaps,
+                    F.col("component") == remaps["old_root"],
                     "left",
                 )
+                # unseen id → its own root (new node)
                 .select(
-                    F.col("r.old_root").alias("old_root"),
-                    F.coalesce(F.col("m2.component"), F.col("r.root")).alias(
-                        "root"
-                    ),
+                    "id",
+                    F.coalesce("root", "component", "id").alias("cur_root"),
                 )
+                .localCheckpoint()
             )
-            remap_dir = os.path.join(path, "remaps")
-            refreshed.unionByName(demoted).write.mode("overwrite").parquet(
-                remap_dir + ".compact"
+            pins.append(resolved)
+            reduced = (
+                delta.join(resolved.withColumnRenamed("id", "u"), "u")
+                .withColumnRenamed("cur_root", "ru")
+                .join(resolved.withColumnRenamed("id", "v"), "v")
+                .withColumnRenamed("cur_root", "rv")
+                .select(F.col("ru").alias("src"), F.col("rv").alias("dst"))
+                .where(F.col("src") != F.col("dst"))
             )
-            _swap_log_dir(remap_dir)
+            new_nodes = resolved.where(F.col("cur_root") == F.col("id")).join(
+                labels_sub.select("id"), "id", "left_anti"
+            ).select("id")
+            # no extra checkpoint: the star forest's own fixed point is
+            # already checkpointed; its output is two cheap projections.  Its
+            # first fingerprint counts the reduced edges, so an all-collapsed
+            # batch costs no separate emptiness probe
+            forest, n_reduced = _star_forest(
+                reduced, "src", "dst", max_rounds
+            )
+            pins.append(forest)
+            m = _forest_labels(forest)
+
+            # 4. label rows for new ids: their reduced-CC component, or (for a
+            # new id whose every edge collapsed — only possible on a healing
+            # replay, where it already resolves through nothing) itself
+            if n_reduced:
+                new_labels = (
+                    new_nodes.join(m, "id", "left")
+                    .select(
+                        "id", F.coalesce("component", "id").alias("component")
+                    )
+                )
+            else:
+                new_labels = new_nodes.select(
+                    "id", F.col("id").alias("component")
+                )
+            (
+                new_labels.withColumn("bucket", _bucket_expr("id", buckets))
+                .repartition(F.col("bucket"))  # one file per touched bucket
+                .write.mode("append")
+                .partitionBy("bucket")
+                .parquet(os.path.join(path, "labels"))
+            )
+
+            # 5. remap rewrite: demoted EXISTING roots (identity rows excluded;
+            # new ids live in labels, not remaps) + re-resolve old entries
+            if n_reduced:
+                demoted = (
+                    m.where(F.col("id") != F.col("component"))
+                    .join(new_nodes.withColumnRenamed("id", "_n"),
+                          F.col("id") == F.col("_n"), "left_anti")
+                    .select(
+                        F.col("id").alias("old_root"),
+                        F.col("component").alias("root"),
+                    )
+                )
+                refreshed = (
+                    remaps.alias("r")
+                    .join(
+                        m.alias("m2"),
+                        F.col("r.root") == F.col("m2.id"),
+                        "left",
+                    )
+                    .select(
+                        F.col("r.old_root").alias("old_root"),
+                        F.coalesce(
+                            F.col("m2.component"), F.col("r.root")
+                        ).alias("root"),
+                    )
+                )
+                remap_dir = os.path.join(path, "remaps")
+                refreshed.unionByName(demoted).write.mode("overwrite").parquet(
+                    remap_dir + ".compact"
+                )
+                _swap_log_dir(remap_dir)
+        finally:
+            _release_checkpoint(*pins)
 
 
 def compact_components_ledger(spark, path: str, lock=False) -> None:

@@ -311,15 +311,14 @@ def _portable_signature_frame(
     # and projection collapse then inlines the md5+conv shingle pipeline
     # into every reference — a k× recompute (measured 82 s vs ~2 s at
     # sf0.01).  The running state zips (current_min, a, b) so every
-    # inner operand is a bound lambda variable.
-    init = F.array(*[
-        F.struct(
-            F.lit(p).cast("long").alias("m"),
-            F.lit(x).cast("long").alias("a"),
-            F.lit(y).cast("long").alias("b"),
-        )
+    # inner operand is a bound lambda variable.  The initial state is
+    # ONE SQL literal: building it from per-coefficient F.struct/F.lit
+    # columns costs ~10 py4j calls each (~1.5 s of driver time per
+    # signature build at 64 hashes) for the same value and schema.
+    init = F.expr("array(" + ", ".join(
+        f"named_struct('m', {p}L, 'a', {x}L, 'b', {y}L)"
         for x, y in zip(coeff_a, coeff_b)
-    ])
+    ) + ")")
     sig_col = F.transform(
         F.aggregate(
             F.col("hs"),
@@ -2713,12 +2712,7 @@ def init_neardup_ledger(
         sig.select("id", "hs").write.mode("overwrite").parquet(
             os.path.join(path, "shingles")
         )
-        rows = num_hashes // bands
-        sig.select(
-            "id", F.posexplode(_band_hash_expr(bands, rows)).alias(
-                "band", "band_hash"
-            )
-        ).select("band", "band_hash", "id").write.mode("overwrite").parquet(
+        _band_rows(sig, num_hashes, bands).write.mode("overwrite").parquet(
             os.path.join(path, "bands")
         )
         spark.createDataFrame(
@@ -2769,66 +2763,26 @@ def neardup_against_ledger(
     (``streaming/windows.neardup_dedup_stream``), whose marker +
     heal-or-advance contract replays the append from the landed
     parquet."""
-    spark = batch_df.sparkSession
-    _recover_ledger_log(path, ["shingles", "bands"])
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    num_hashes, shingle_size, bands = (
-        meta["num_hashes"], meta["shingle_size"], meta["bands"]
+    num_hashes, shingle_size, bands = _neardup_geometry(
+        batch_df.sparkSession, path
     )
-    rows = num_hashes // bands
-
     batch_df = batch_df.filter(F.col(text_col).isNotNull())
     sig = _portable_signature_frame(
         batch_df, text_col, id_col, num_hashes, shingle_size
     ).localCheckpoint()  # barrier: banding + verify + append all re-read it
-    banded = sig.select(
-        "id", F.posexplode(_band_hash_expr(bands, rows)).alias(
-            "band", "band_hash"
-        )
-    )
-
-    ledger_bands = spark.read.parquet(os.path.join(path, "bands"))
-    ledger_sh = spark.read.parquet(os.path.join(path, "shingles"))
-    candidates = (
-        banded.join(
-            ledger_bands.withColumnRenamed("id", "ledger_id"),
-            ["band", "band_hash"],
-        )
-        .select("id", "ledger_id")
-        .distinct()
-    )
-    inter = F.size(F.array_intersect("hs", "ledger_hs"))
-    union = F.size("hs") + F.size("ledger_hs") - inter
-    dup_ids = (
-        candidates.join(sig.select("id", "hs"), "id")
-        .join(
-            ledger_sh.select(
-                F.col("id").alias("ledger_id"), F.col("hs").alias("ledger_hs")
-            ),
-            "ledger_id",
-        )
-        .filter((inter / union) >= threshold)
-        .select("id")
-        .distinct()
-    )
+    dup_ids = _ledger_verified_pairs(
+        sig, path, num_hashes, bands, threshold
+    ).select(F.col("id_a").alias("id"))
     survivor_ids = sig.select("id").join(dup_ids, "id", "left_anti")
     survivors = batch_df.join(
         survivor_ids.withColumnRenamed("id", id_col), id_col, "semi"
     )
     if update:
-        staged = sig.join(
-            survivor_ids, "id", "semi"
-        ).localCheckpoint()  # materialize BEFORE appending to the tables
-        # the lazy plan would otherwise re-read
-        staged.select("id", "hs").write.mode("append").parquet(
-            os.path.join(path, "shingles")
-        )
-        staged.select(
-            "id", F.posexplode(_band_hash_expr(bands, rows)).alias(
-                "band", "band_hash"
-            )
-        ).select("band", "band_hash", "id").write.mode("append").parquet(
-            os.path.join(path, "bands")
+        # materialize BEFORE appending to the tables the lazy plan would
+        # otherwise re-read
+        _append_to_neardup_ledger(
+            sig.join(survivor_ids, "id", "semi").localCheckpoint(),
+            path, num_hashes, bands,
         )
     return survivors
 
@@ -2850,32 +2804,56 @@ def neardup_pairs_against_ledger(
 
     Same plan as the filter twin (batch signatures → band-keyed join
     against the ledger postings → exact verify on the candidate
-    sliver), read-only (never appends; pair discovery and ledger
-    admission are separate decisions — compose with
-    ``neardup_against_ledger(update=True)`` or the streaming handler
-    for admission).  Intra-batch pairs are NOT included: union with
-    :func:`lsh_verified_pairs` over the batch when the batch can
+    sliver; both run :func:`_ledger_verified_pairs`), read-only (never
+    appends; the filter twin's rejects are exactly ``distinct(id_a)``
+    here).  ``operators/flow.IncrementalDedupFlow.ingest`` derives
+    pairs AND admission from one signature pass; elsewhere compose
+    with ``neardup_against_ledger(update=True)`` or the streaming
+    handler for admission.  Intra-batch pairs are NOT included: union
+    with :func:`lsh_verified_pairs` over the batch when the batch can
     contain its own duplicates."""
-    spark = batch_df.sparkSession
-    _recover_ledger_log(path, ["shingles", "bands"])
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    num_hashes, shingle_size, bands = (
-        meta["num_hashes"], meta["shingle_size"], meta["bands"]
+    num_hashes, shingle_size, bands = _neardup_geometry(
+        batch_df.sparkSession, path
     )
-    rows = num_hashes // bands
     sig = _portable_signature_frame(
         batch_df.filter(F.col(text_col).isNotNull()),
         text_col, id_col, num_hashes, shingle_size,
     )
-    banded = sig.select(
-        "id", F.posexplode(_band_hash_expr(bands, rows)).alias(
-            "band", "band_hash"
-        )
-    )
+    return _ledger_verified_pairs(sig, path, num_hashes, bands, threshold)
+
+
+def _neardup_geometry(spark, path: str) -> "tuple[int, int, int]":
+    """Heal an interrupted compaction swap of the near-dup ledger, then
+    read its pinned ``(num_hashes, shingle_size, bands)``."""
+    _recover_ledger_log(path, ["shingles", "bands"])
+    meta = spark.read.parquet(os.path.join(path, "meta")).first()
+    return meta["num_hashes"], meta["shingle_size"], meta["bands"]
+
+
+def _band_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """``(band, band_hash, id)`` posting rows of a signature frame — the
+    near-dup ledger's ``bands`` table layout."""
+    return sig.select(
+        "id", F.posexplode(
+            _band_hash_expr(bands, num_hashes // bands)
+        ).alias("band", "band_hash"),
+    ).select("band", "band_hash", "id")
+
+
+def _ledger_verified_pairs(
+    sig: DataFrame, path: str, num_hashes: int, bands: int, threshold: float
+) -> DataFrame:
+    """``(id_a, id_b, jaccard)`` for a batch signature frame ``(id, hs,
+    signature)`` against the near-dup ledger at ``path``: band-keyed
+    join against the ledger postings (candidates only), then the exact
+    Jaccard verify on the candidate sliver via the stored hashed
+    shingle sets.  The one candidate/verify plan behind both ledger
+    queries and the flow facade's fused ingest."""
+    spark = sig.sparkSession
     ledger_bands = spark.read.parquet(os.path.join(path, "bands"))
     ledger_sh = spark.read.parquet(os.path.join(path, "shingles"))
     candidates = (
-        banded.join(
+        _band_rows(sig, num_hashes, bands).join(
             ledger_bands.withColumnRenamed("id", "ledger_id"),
             ["band", "band_hash"],
         )
@@ -2898,6 +2876,20 @@ def neardup_pairs_against_ledger(
             F.col("ledger_id").alias("id_b"),
             (inter / union).alias("jaccard"),
         )
+    )
+
+
+def _append_to_neardup_ledger(
+    staged: DataFrame, path: str, num_hashes: int, bands: int
+) -> None:
+    """Admit a materialized ``(id, hs, signature)`` frame: append its
+    shingle sets, then its band postings (the order the crash contract
+    of :func:`neardup_against_ledger` describes)."""
+    staged.select("id", "hs").write.mode("append").parquet(
+        os.path.join(path, "shingles")
+    )
+    _band_rows(staged, num_hashes, bands).write.mode("append").parquet(
+        os.path.join(path, "bands")
     )
 
 

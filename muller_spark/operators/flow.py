@@ -4,12 +4,17 @@ keep-list, without reading four modules.
 
 The chain it wires (each stage O(batch), nothing re-scans the corpus):
 
-1. ``operators/dedup.neardup_pairs_against_ledger`` — the batch's
-   near-dup edges against the persisted MinHash ledger (read-only);
+1. ONE signature pass over the batch and ONE band-keyed candidate join
+   + exact Jaccard verify against the persisted MinHash ledger
+   (``operators/dedup._portable_signature_frame`` and
+   ``_ledger_verified_pairs``) — the batch's near-dup edges, exactly
+   what ``neardup_pairs_against_ledger`` returns;
 2. ``operators/components.components_ledger_ingest`` — folds those
    edges into the persisted cluster labels in O(affected);
-3. ``operators/dedup.neardup_against_ledger`` — admits the batch's
-   non-duplicate survivors into the near-dup ledger;
+3. admission as the complement of the edges: batch documents absent
+   from the pairs' ``id_a`` are appended to the near-dup ledger —
+   the survivors and ledger state ``neardup_against_ledger(update=
+   True)`` would produce, without re-signing or re-verifying;
 4. ``operators/dedup.keep_best_against_ledger`` — the keep decision
    off the persisted label table (one label read, two keyed
    aggregates, zero graph work at read time).
@@ -33,6 +38,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from muller_spark.operators.ledger import _writer_lease
 
@@ -104,34 +110,60 @@ class IncrementalDedupFlow:
         """One batch through the whole chain; returns the batch's
         non-duplicate survivors (now admitted to the ledger).
 
-        Order matters and is pinned here: pair discovery runs BEFORE
-        admission mutates the near-dup ledger (else a batch document
-        would pair with itself), and the pair edges are checkpointed
-        before the components ingest consumes them twice (resolve +
-        append) — re-deriving them after admission would see the
-        mutated ledger.  With ``lock`` set the near-dup ledger's lease
-        is held for the whole chain, so a refused ingest leaves both
-        ledgers untouched."""
+        One pass: the ledger meta is read once, the batch is signed
+        once, and one band join + exact verify yields the pair edges;
+        the cluster fold consumes the edges and admission is their
+        complement (batch ids absent from ``id_a``), so nothing is
+        re-derived.  Order matters and is pinned here: pair discovery
+        runs BEFORE admission mutates the near-dup ledger (else a
+        batch document would pair with itself), and the signature and
+        edges are pinned before the components ingest consumes the
+        edges twice (resolve + append) — re-deriving them after
+        admission would see the mutated ledger.  Both pins are
+        released before returning; the returned frame reads only the
+        batch and the checkpointed admitted ids.  With ``lock`` set
+        the near-dup ledger's lease is held for the whole chain, so a
+        refused ingest leaves both ledgers untouched."""
         from muller_spark.operators.components import (
             components_ledger_ingest,
         )
         from muller_spark.operators.dedup import (
-            neardup_against_ledger,
-            neardup_pairs_against_ledger,
+            _append_to_neardup_ledger,
+            _ledger_verified_pairs,
+            _neardup_geometry,
+            _persist_corpus,
+            _portable_signature_frame,
         )
 
-        with _writer_lease(self.neardup_path, self.lock):
-            pairs = neardup_pairs_against_ledger(
-                batch_df, self.text_col, self.id_col, self.neardup_path,
-                threshold=self.threshold,
-            ).localCheckpoint()
-            components_ledger_ingest(
-                pairs, self.clusters_path, src="id_a", dst="id_b",
-                lock=self.lock,
+        path = self.neardup_path
+        with _writer_lease(path, self.lock):
+            num_hashes, shingle_size, bands = _neardup_geometry(
+                batch_df.sparkSession, path
             )
-            return neardup_against_ledger(
-                batch_df, self.text_col, self.id_col, self.neardup_path,
-                threshold=self.threshold, update=True,
+            batch_df = batch_df.filter(F.col(self.text_col).isNotNull())
+            sig = _persist_corpus(_portable_signature_frame(
+                batch_df, self.text_col, self.id_col, num_hashes,
+                shingle_size,
+            ))
+            pairs = _persist_corpus(_ledger_verified_pairs(
+                sig, path, num_hashes, bands, self.threshold
+            ))
+            try:
+                components_ledger_ingest(
+                    pairs, self.clusters_path, src="id_a", dst="id_b",
+                    lock=self.lock,
+                )
+                admitted = sig.join(
+                    pairs.select(F.col("id_a").alias("id")), "id",
+                    "left_anti",
+                ).localCheckpoint()  # materialize BEFORE the appends
+                _append_to_neardup_ledger(admitted, path, num_hashes, bands)
+            finally:
+                pairs.unpersist()
+                sig.unpersist()
+            return batch_df.join(
+                admitted.select(F.col("id").alias(self.id_col)),
+                self.id_col, "semi",
             )
 
     def stream(

@@ -396,7 +396,7 @@ def make_neardup_batch_handler(
     import os as _os
 
     from muller_spark.operators.dedup import (
-        _band_hash_expr,
+        _append_to_neardup_ledger,
         _portable_signature_frame,
         neardup_against_ledger,
     )
@@ -413,21 +413,12 @@ def make_neardup_batch_handler(
             )
             survivors.write.mode("overwrite").parquet(batch_out)
         meta = spark.read.parquet(_os.path.join(ledger_path, "meta")).first()
-        rows = meta["num_hashes"] // meta["bands"]
         sig = _portable_signature_frame(
             spark.read.parquet(batch_out), text_col, id_col,
             meta["num_hashes"], meta["shingle_size"],
         ).localCheckpoint()
-        sig.select("id", "hs").write.mode("append").parquet(
-            _os.path.join(ledger_path, "shingles")
-        )
-        sig.select(
-            "id",
-            F.posexplode(_band_hash_expr(meta["bands"], rows)).alias(
-                "band", "band_hash"
-            ),
-        ).select("band", "band_hash", "id").write.mode("append").parquet(
-            _os.path.join(ledger_path, "bands")
+        _append_to_neardup_ledger(
+            sig, ledger_path, meta["num_hashes"], meta["bands"]
         )
 
     return land

@@ -229,6 +229,46 @@ def test_incremental_dedup_flow_facade_with_lock(spark, tmp_path):
     assert not os.path.exists(other.clusters_path)
 
 
+def test_incremental_dedup_flow_ingest_signs_once(
+    spark, tmp_path, monkeypatch
+):
+    """One ingest builds the batch's MinHash signature exactly once:
+    pair discovery, the cluster fold and admission all reuse it, and
+    the verified pairs decide admission (survivors = batch minus the
+    pairs' id_a)."""
+    from muller_spark.operators import dedup
+    from muller_spark.operators.flow import IncrementalDedupFlow
+
+    def frame(members):
+        return spark.createDataFrame(
+            [(f * 100 + m, _family_text(f, m)) for f, m in members],
+            "doc_id long, text string",
+        )
+
+    flow = IncrementalDedupFlow(
+        os.path.join(str(tmp_path), "flow1"), "text", "doc_id",
+        threshold=0.5,
+    )
+    flow.init(frame([(0, 0), (1, 0)]))
+    calls = []
+    real = dedup._portable_signature_frame
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_portable_signature_frame", counting)
+    survivors = {
+        r["doc_id"]
+        for r in flow.ingest(frame([(0, 1), (2, 0), (1, 1)])).collect()
+    }
+    assert len(calls) == 1
+    assert survivors == {200}
+    assert {r["id"]: r["component"] for r in flow.labels().collect()} == {
+        0: 0, 1: 0, 100: 100, 101: 100,
+    }
+
+
 def test_incremental_dedup_flow_stream_twin(spark, tmp_path):
     """The streaming twin maintains BOTH ledgers per micro-batch and
     matches the batch facade's end state on the same batch sequence;

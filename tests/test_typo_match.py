@@ -177,3 +177,30 @@ def test_typo_match_plan_has_no_cartesian(spark, tmp_path):
     ).executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize("slack,raises", [(0, False), (-1, True)])
+def test_typo_match_cap_counts_distinct_pairs(
+    spark, tmp_path, monkeypatch, slack, raises
+):
+    """The candidate cap bounds DISTINCT (query token, term) pairs: at
+    d=2 a pair repeats once per shared deletion key, so a cap between
+    the distinct pairs and the raw key-join rows must not raise, and a
+    cap below the distinct pairs still must."""
+    from muller_spark.index.fuzzy import deletion_keys
+
+    idx = _build(spark, tmp_path, typo_keys=2)
+    vocab = {t for text in CORPUS for t in text.lower().split()}
+    distinct = sum(_lev("quick", t) <= 2 for t in vocab)
+    cap = distinct + slack
+    # "quick" alone meets itself on every one of its deletion keys
+    assert len(deletion_keys("quick", 2)) > distinct
+    monkeypatch.setattr(InvertedIndex, "_TYPO_CANDIDATE_CAP", cap)
+    if raises:
+        with pytest.raises(MullerSparkError, match="exceeds"):
+            idx.search("quick", "typo_match", max_edits=2).collect()
+    else:
+        got = {r["id"] for r in idx.search(
+            "quick", "typo_match", max_edits=2
+        ).collect()}
+        assert got == _brute(CORPUS, ["quick"], 2)
