@@ -15,7 +15,9 @@ converges to per-component min-rooted stars in O(log² n) rounds
 (observed O(log n)), INDEPENDENT of diameter.  No step ever
 materializes anything larger than the (monotonically shrinking-target)
 edge list, every stage is keyed on a node id, and the driver only sees
-per-round change *counts* — never rows.
+per-round fingerprints — never rows.  The loop stops once the edge
+set is a min-rooted star forest, so a star-forest input runs zero
+rounds; a ledger ingest rewrites its remaps only if it demotes a root.
 
 Reference parity note: the reference engine has no graph operator at
 all (SURVEY.md §2.7 — "there are no relational joins"); this is part
@@ -120,22 +122,24 @@ def connected_components(
     appear (same contract as ``dedup_clusters`` over a pair graph,
     which never contains self-pairs).
 
-    Each round runs one large-star then one small-star pass (two keyed
-    aggregates + joins, each ``localCheckpoint``-ed so the iterative
-    plan's lineage stays flat), then compares the edge set against the
-    previous round — convergence in ≤ O(log² n) rounds is a theorem of
-    the construction, so ``max_rounds=30`` covers any graph that fits
-    on disk; hitting the cap RAISES rather than returning a partially
-    contracted labeling (the ``dedup_clusters`` policy: a silent split
-    component would let duplicates survive as multiple "canonical"
-    rows).
+    Each round runs one large-star then one small-star pass
+    (``localCheckpoint``-ed so the iterative plan's lineage stays flat)
+    and fingerprints the edge set; a repeated fingerprint triggers the
+    exact test that the edge set is a min-rooted star forest, which
+    stops the loop.  The input gets the same test folded into its edge
+    count, so a star-forest input runs zero rounds.  Convergence in
+    ≤ O(log² n) rounds is a theorem of the construction, so
+    ``max_rounds=30`` covers any graph that fits on disk; hitting the
+    cap RAISES rather than returning a partially contracted labeling
+    (the ``dedup_clusters`` policy: a silent split component would let
+    duplicates survive as multiple "canonical" rows).
 
     At 100 TB scale: every stage shuffles on a node id, the edge list
     never grows beyond its symmetrized input, and long chains — the
     min-label algorithm's worst case — contract exponentially (a
     diameter-10 000 chain converges in ~15 rounds, not 10 000).
     """
-    return _forest_labels(_star_forest(edges, src, dst, max_rounds)[0])
+    return _forest_labels(_star_forest(edges, src, dst, max_rounds))
 
 
 def _release_checkpoint(*frames: DataFrame) -> None:
@@ -162,44 +166,57 @@ def _forest_labels(forest: DataFrame) -> DataFrame:
     return leaves.union(roots)
 
 
+def _edge_hash(u: str, v: str):
+    # decimal: a long sum of 64-bit hashes overflows under ANSI
+    return F.xxhash64(u, v).cast("decimal(38,0)")
+
+
+def _fingerprint_and_star(df: DataFrame) -> "tuple[tuple, bool]":
+    """The ``(count, xxhash64-sum)`` fingerprint of a canonical (u > v)
+    edge set and whether it is a min-rooted star forest, the rounds'
+    fixed point: no node with an out-edge has any other edge, so every
+    edge is leaf → root and every root is its component's minimum.
+    One action, with a node-keyed degree aggregate under the global
+    one."""
+    ends = df.select(F.explode(F.array(
+        F.struct(F.col("u").alias("n"), F.col("v").alias("w"),
+                 F.lit(1).alias("out")),
+        F.struct(F.col("v").alias("n"), F.col("u").alias("w"),
+                 F.lit(0).alias("out")),
+    )).alias("e")).select("e.*")
+    deg = ends.groupBy("n").agg(
+        F.sum("out").alias("out"),
+        F.count(F.lit(1)).alias("deg"),
+        F.sum(F.when(F.col("out") == 1, _edge_hash("n", "w"))).alias("h"),
+    )
+    n, h, n_bad = deg.agg(
+        F.sum("out"),
+        F.sum("h"),
+        F.count(F.when((F.col("out") > 0) & (F.col("deg") > 1), 1)),
+    ).first()
+    return (n, h), n_bad == 0
+
+
 def _star_forest(
     edges: DataFrame, src: str, dst: str, max_rounds: int
-) -> "tuple[DataFrame, int]":
+) -> DataFrame:
     """The converged, checkpointed star forest ``(u, v)`` of
-    :func:`connected_components` plus the number of canonical
-    (deduplicated, self-loop-free) input edges, which its first
-    fingerprint counts anyway — callers decide emptiness from it
-    instead of probing the edge plan with another action.  Superseded
-    rounds are released as the loop goes; the returned forest is the
-    caller's to release."""
-    # lazy checkpoint: the initial fingerprint below materializes it,
-    # so setup is one scheduled job instead of three (eager checkpoint
-    # + take(1) emptiness probe + fingerprint)
+    :func:`connected_components`; a star-forest input returns after
+    zero rounds.  Superseded rounds are released as the loop goes; the
+    returned forest is the caller's to release."""
+    # lazy checkpoint: the first fingerprint below materializes it
     cur = _canonical(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     ).localCheckpoint(eager=False)
 
-    # Per-round cost discipline: ONE checkpoint (large-star + small-star
-    # composed in a single plan) and ONE aggregate job computing a
-    # (count, xxhash64-sum) set fingerprint.  A fingerprint match only
-    # TRIGGERS the exact set-equality check (subtract) — convergence is
-    # still decided by the exact check, the fingerprint merely keeps the
-    # expensive comparison off the per-round path, so a hash collision
-    # costs one wasted subtract, never a wrong answer.
-    def _stats(df: DataFrame) -> tuple:
-        # decimal sum: long-sum of 64-bit hashes overflows under ANSI
-        return tuple(
-            df.agg(
-                F.count(F.lit(1)),
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-            ).first()
-        )
-
-    prev = _stats(cur)
-    n_edges = prev[0]
-    if not n_edges:  # empty edge set: no components
-        return cur, 0
-    converged = False
+    # Per round: ONE lazy checkpoint (large-star + small-star in one
+    # plan), materialized by ONE global (count, xxhash64-sum) aggregate.
+    # A repeated fingerprint only TRIGGERS the exact star-forest test,
+    # which decides convergence (rounds preserve components; a star
+    # forest is their fixed point): its node-keyed shuffle stays off the
+    # per-round path, and a collision costs one wasted test, never a
+    # wrong answer.
+    prev, converged = _fingerprint_and_star(cur)
     # Round-13 NEGATIVE results (kept as documentation, guide §1):
     # (a) folding TWO star rounds per checkpoint + fingerprint cycle
     # (half the scheduled barriers) measured WORSE — 60 → 55 jobs only
@@ -213,15 +230,14 @@ def _star_forest(
     # shuffles growing cluster SETS and its root row accumulates the
     # whole component (exactly the giant-key/straggler hazard of guide
     # §2.5 that large-star/small-star was chosen to avoid at 100 TB).
-    for _ in range(max_rounds):
-        # lazy checkpoint + stats aggregate = ONE job per round: the
-        # fingerprint action is what materializes the checkpoint, so
-        # the per-round scheduling overhead (which dominates on small
-        # edge sets) is a single driver action, not checkpoint-then-
-        # count
+    for _ in range(0 if converged else max_rounds):
+        # one driver action per round: per-round scheduling overhead
+        # dominates on small edge sets
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
-        stats = _stats(nxt)
-        converged = stats == prev and nxt.subtract(cur).count() == 0
+        stats = tuple(
+            nxt.agg(F.count(F.lit(1)), F.sum(_edge_hash("u", "v"))).first()
+        )
+        converged = stats == prev and _fingerprint_and_star(nxt)[1]
         # nxt is materialized and its lineage cut: cur is superseded
         _release_checkpoint(cur)
         prev, cur = stats, nxt
@@ -233,7 +249,7 @@ def _star_forest(
             "large-star/small-star rounds — theoretically impossible "
             "below 2^max_rounds nodes; raise max_rounds"
         )
-    return cur, n_edges
+    return cur
 
 
 # ---------------------------------------------------------------------------
@@ -274,7 +290,8 @@ def init_components_ledger(
       demoted by later merges; values are always CURRENT roots (one
       hop resolves), kept closed by re-resolving existing entries at
       each ingest.  Bounded by the number of merges, not corpus size;
-      rewritten (crash-safe swap) per merging ingest;
+      rewritten (crash-safe swap) only by an ingest that demotes an
+      existing root;
     - ``meta`` — pins (buckets, id type) so mixed-geometry state is
       impossible.
 
@@ -288,10 +305,11 @@ def init_components_ledger(
 
     At 100 TB: ingest cost = bucket-pruned label lookup (O(batch
     buckets)) + star rounds on the ROOT-SPACE reduced graph (≤ batch
-    edges, O(log affected) rounds) + a remap-table rewrite (O(merges
-    ever)) + a label append (O(new nodes)).  Nothing scales with
-    corpus edges; only report scans the label log, and report OUTPUT
-    is corpus-sized by definition.
+    edges, O(log affected) rounds, none when it already is a star
+    forest) + a label append (O(new nodes)) + a remap-table rewrite
+    (O(merges ever)) only on ingests that demote a root.  Nothing
+    scales with corpus edges; only report scans the label log, and
+    report OUTPUT is corpus-sized by definition.
 
     ``lock=`` enforces the single-writer discipline with a lease
     (``operators.ledger._writer_lease``).
@@ -321,28 +339,28 @@ def init_components_ledger(
         ).write.mode("error").parquet(os.path.join(path, "remaps"))
 
 
-def _read_labels(spark, path: str) -> DataFrame:
-    """The label log with its ``bucket`` partition column.  An
-    all-empty log (seeded from an empty edge set, or never appended)
-    has no partition directories for schema inference, so fall back
-    to an empty frame with the meta-pinned schema."""
-    from pyspark.errors import AnalysisException
+def _read_meta(spark, path: str):
+    """The ``(buckets, id_type)`` row, read with its known schema."""
+    return spark.read.schema("buckets int, id_type string").parquet(
+        os.path.join(path, "meta")
+    ).first()
 
 
+def _read_labels(spark, path: str, id_type: "str | None" = None) -> DataFrame:
+    """The label log with its ``bucket`` partition column, read with
+    the meta-pinned schema (no inference job; an empty log reads as an
+    empty frame)."""
+    id_type = id_type or _read_meta(spark, path)["id_type"]
     _recover_log_swap(os.path.join(path, "labels"))
-    try:
-        return spark.read.parquet(os.path.join(path, "labels"))
-    except AnalysisException:
-        t = spark.read.parquet(os.path.join(path, "meta")).first()["id_type"]
-        return spark.createDataFrame(
-            [], f"id {t}, component {t}, bucket int"
-        )
+    return spark.read.schema(
+        f"id {id_type}, component {id_type}, bucket int"
+    ).parquet(os.path.join(path, "labels"))
 
 
 _BROADCAST_REMAPS_MAX_BYTES = 128 << 20
 
 
-def _remaps_df(spark, path: str) -> DataFrame:
+def _remaps_df(spark, path: str, id_type: str) -> DataFrame:
     """The remap table, broadcast-hinted only while it is small on
     disk.  Remaps are bounded by merges-ever between compactions —
     usually tiny, but a long-uncompacted ledger under a merge-heavy
@@ -351,22 +369,26 @@ def _remaps_df(spark, path: str) -> DataFrame:
     shuffles on the root key and AQE takes over.  Compaction folds the
     table into the labels and resets it to empty."""
     remap_dir = os.path.join(path, "remaps")
+    _recover_log_swap(remap_dir)
     size = sum(
         os.path.getsize(os.path.join(d, f))
         for d, _, fs in os.walk(remap_dir) for f in fs
     )
-    remaps = spark.read.parquet(remap_dir)
+    remaps = spark.read.schema(
+        f"old_root {id_type}, root {id_type}"
+    ).parquet(remap_dir)
     return F.broadcast(remaps) if size <= _BROADCAST_REMAPS_MAX_BYTES \
         else remaps
 
 
-def _resolved_labels(spark, path: str) -> DataFrame:
+def _resolved_labels(
+    spark, path: str, id_type: "str | None" = None
+) -> DataFrame:
     """labels ⟕ remaps, one hop (remaps are closed): the CURRENT
     ``(id, component)`` view."""
-
-    _recover_log_swap(os.path.join(path, "remaps"))
-    labels = _read_labels(spark, path).select("id", "component")
-    remaps = _remaps_df(spark, path)
+    id_type = id_type or _read_meta(spark, path)["id_type"]
+    labels = _read_labels(spark, path, id_type).select("id", "component")
+    remaps = _remaps_df(spark, path, id_type)
     return (
         labels.join(
             remaps,
@@ -412,9 +434,10 @@ def components_ledger_ingest(
     4. append label rows for NEW ids (labels before remaps: the crash
        window between the two writes heals on replay — see
        :func:`init_components_ledger`);
-    5. rewrite the remap table: demoted roots gain entries, existing
-       entries whose value was demoted re-resolve (keeps the table
-       closed so reads stay one-hop).
+    5. only if the batch demotes an existing root, rewrite the remap
+       table: demoted roots gain entries, existing entries whose value
+       was demoted re-resolve (keeps the table closed so reads stay
+       one-hop).
 
     ``lock=`` enforces the single-writer discipline with a lease —
     NOTE: replay of a COMPLETED ingest is absorbed by the semilattice,
@@ -423,7 +446,7 @@ def components_ledger_ingest(
     """
     with _writer_lease(path, lock):
         spark = edges.sparkSession
-        meta = spark.read.parquet(os.path.join(path, "meta")).first()
+        meta = _read_meta(spark, path)
         buckets = int(meta["buckets"])
         # Geometry guard: bucketing hashes with xxhash64, which is
         # TYPE-sensitive — an int-typed batch against a long-seeded ledger
@@ -472,13 +495,12 @@ def components_ledger_ingest(
             if not hit:
                 return  # empty batch after self-loop/dedup canonicalization
 
-            _recover_log_swap(os.path.join(path, "remaps"))
             labels_sub = (
-                _read_labels(spark, path)
+                _read_labels(spark, path, pinned)
                 .where(F.col("bucket").isin(hit))
                 .select("id", "component")
             )
-            remaps = _remaps_df(spark, path)
+            remaps = _remaps_df(spark, path, pinned)
             resolved = (
                 nodes.join(labels_sub, "id", "left")
                 .join(
@@ -490,6 +512,7 @@ def components_ledger_ingest(
                 .select(
                     "id",
                     F.coalesce("root", "component", "id").alias("cur_root"),
+                    F.col("component").isNull().alias("is_new"),
                 )
                 .localCheckpoint()
             )
@@ -502,72 +525,47 @@ def components_ledger_ingest(
                 .select(F.col("ru").alias("src"), F.col("rv").alias("dst"))
                 .where(F.col("src") != F.col("dst"))
             )
-            new_nodes = resolved.where(F.col("cur_root") == F.col("id")).join(
-                labels_sub.select("id"), "id", "left_anti"
-            ).select("id")
+            new_nodes = resolved.where("is_new").select("id")
             # no extra checkpoint: the star forest's own fixed point is
-            # already checkpointed; its output is two cheap projections.  Its
-            # first fingerprint counts the reduced edges, so an all-collapsed
-            # batch costs no separate emptiness probe
-            forest, n_reduced = _star_forest(
-                reduced, "src", "dst", max_rounds
-            )
+            # already checkpointed; its output is two cheap projections
+            forest = _star_forest(reduced, "src", "dst", max_rounds)
             pins.append(forest)
             m = _forest_labels(forest)
 
-            # 4. label rows for new ids: their reduced-CC component, or (for a
-            # new id whose every edge collapsed — only possible on a healing
-            # replay, where it already resolves through nothing) itself
-            if n_reduced:
-                new_labels = (
-                    new_nodes.join(m, "id", "left")
-                    .select(
-                        "id", F.coalesce("component", "id").alias("component")
-                    )
-                )
-            else:
-                new_labels = new_nodes.select(
-                    "id", F.col("id").alias("component")
-                )
+            # 4. label rows for new ids: their reduced-CC component, or
+            # itself for a new id whose every edge collapsed (only on a
+            # healing replay, where it already resolves through nothing)
             (
-                new_labels.withColumn("bucket", _bucket_expr("id", buckets))
+                new_nodes.join(m, "id", "left")
+                .select("id", F.coalesce("component", "id").alias("component"))
+                .withColumn("bucket", _bucket_expr("id", buckets))
                 .repartition(F.col("bucket"))  # one file per touched bucket
                 .write.mode("append")
                 .partitionBy("bucket")
                 .parquet(os.path.join(path, "labels"))
             )
 
-            # 5. remap rewrite: demoted EXISTING roots (identity rows excluded;
-            # new ids live in labels, not remaps) + re-resolve old entries
-            if n_reduced:
-                demoted = (
-                    m.where(F.col("id") != F.col("component"))
-                    .join(new_nodes.withColumnRenamed("id", "_n"),
-                          F.col("id") == F.col("_n"), "left_anti")
-                    .select(
-                        F.col("id").alias("old_root"),
-                        F.col("component").alias("root"),
-                    )
-                )
-                refreshed = (
-                    remaps.alias("r")
-                    .join(
-                        m.alias("m2"),
-                        F.col("r.root") == F.col("m2.id"),
-                        "left",
-                    )
-                    .select(
-                        F.col("r.old_root").alias("old_root"),
-                        F.coalesce(
-                            F.col("m2.component"), F.col("r.root")
-                        ).alias("root"),
-                    )
-                )
-                remap_dir = os.path.join(path, "remaps")
-                refreshed.unionByName(demoted).write.mode("overwrite").parquet(
-                    remap_dir + ".compact"
-                )
-                _swap_log_dir(remap_dir)
+            # 5. remap rewrite, only when an EXISTING root is demoted (a
+            # forest leaf that is not a new id; new ids live in labels):
+            # otherwise every refreshed entry equals its current row.  A
+            # replay after a crash here re-derives the demotion, since the
+            # new ids now resolve through their label rows
+            demoted = forest.join(
+                new_nodes.withColumnRenamed("id", "u"), "u", "left_anti"
+            ).select(F.col("u").alias("old_root"), F.col("v").alias("root"))
+            if not demoted.count():
+                return
+            refreshed = remaps.alias("r").join(
+                m.alias("m2"), F.col("r.root") == F.col("m2.id"), "left"
+            ).select(
+                "r.old_root",
+                F.coalesce("m2.component", "r.root").alias("root"),
+            )
+            remap_dir = os.path.join(path, "remaps")
+            refreshed.unionByName(demoted).write.mode("overwrite").parquet(
+                remap_dir + ".compact"
+            )
+            _swap_log_dir(remap_dir)
         finally:
             _release_checkpoint(*pins)
 
@@ -585,14 +583,15 @@ def compact_components_ledger(spark, path: str, lock=False) -> None:
     enforces the no-compact-while-ingesting discipline with a lease."""
 
     with _writer_lease(path, lock):
-        meta = spark.read.parquet(os.path.join(path, "meta")).first()
+        meta = _read_meta(spark, path)
         buckets = int(meta["buckets"])
+        id_type = meta["id_type"]
         labels_dir = os.path.join(path, "labels")
         remap_dir = os.path.join(path, "remaps")
         _recover_log_swap(labels_dir)
         _recover_log_swap(remap_dir)
         (
-            _resolved_labels(spark, path)
+            _resolved_labels(spark, path, id_type)
             .withColumn("bucket", _bucket_expr("id", buckets))
             .repartition(F.col("bucket"))
             .write.mode("overwrite")
@@ -606,7 +605,6 @@ def compact_components_ledger(spark, path: str, lock=False) -> None:
         # new dir uncommitted) where a crash leaves `remaps/` missing and
         # _recover_log_swap cannot heal it (no .compact sibling) — every
         # subsequent report/ingest would raise until manual repair.
-        id_type = meta["id_type"]
         spark.createDataFrame(
             [], f"old_root {id_type}, root {id_type}"
         ).write.mode("overwrite").parquet(remap_dir + ".compact")

@@ -341,3 +341,180 @@ def test_components_ledger_stream_end_to_end(spark, tmp_path):
         for r in components_ledger_report(spark, path).collect()
     }
     assert got == {0: 0, 1: 0, 10: 0, 11: 0, 20: 20, 21: 20}
+
+
+# ---------------------------------------------------------------------------
+# early exit: an edge set that already is a min-rooted star forest (the
+# rounds' fixed point) runs no star round at all
+# ---------------------------------------------------------------------------
+
+def _count_large_star(monkeypatch):
+    import muller_spark.operators.components as comp_mod
+
+    calls = []
+    real = comp_mod._large_star
+
+    def counting(edges):
+        calls.append(1)
+        return real(edges)
+
+    monkeypatch.setattr(comp_mod, "_large_star", counting)
+    return calls
+
+
+def test_star_forest_input_runs_zero_rounds(spark, monkeypatch):
+    calls = _count_large_star(monkeypatch)
+    # two stars rooted at their minima, given in both orientations
+    edges = [(5, 1), (1, 7), (9, 1), (20, 10), (10, 30)]
+    got = _run(spark, edges)
+    assert calls == []
+    assert got == _union_find(edges)
+    # the cap is not hit when no round is needed
+    assert _run(spark, edges, max_rounds=0) == got
+    assert calls == []
+
+
+@pytest.mark.parametrize("edges", [
+    [(3, 2), (2, 1)],  # path: node 2 has both an out- and an in-edge
+    [(5, 1), (5, 3)],  # node 5 has out-degree 2
+], ids=["path", "out_degree_2"])
+def test_non_star_input_runs_a_round(spark, monkeypatch, edges):
+    calls = _count_large_star(monkeypatch)
+    assert _run(spark, edges) == _union_find(edges)
+    assert len(calls) >= 1
+
+
+# ---------------------------------------------------------------------------
+# the ledger rewrites its remap table only when a batch demotes an
+# existing root
+# ---------------------------------------------------------------------------
+
+def _dir_bytes(root):
+    import os
+
+    out = {}
+    for d, _, fs in os.walk(root):
+        for f in fs:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def _count_swaps(monkeypatch):
+    import muller_spark.operators.components as comp_mod
+
+    calls = []
+    real = comp_mod._swap_log_dir
+
+    def counting(live_dir):
+        calls.append(live_dir)
+        return real(live_dir)
+
+    monkeypatch.setattr(comp_mod, "_swap_log_dir", counting)
+    return calls
+
+
+def _cc_of(spark, batches):
+    union = [e for b in batches for e in b]
+    return _run(spark, union)
+
+
+def test_components_ledger_attach_only_skips_remap_rewrite(
+    spark, tmp_path, monkeypatch
+):
+    import os
+
+    from muller_spark.operators.components import (
+        components_ledger_ingest,
+        init_components_ledger,
+    )
+
+    path = os.path.join(str(tmp_path), "cl")
+    seed, bridge = [(1, 0), (11, 10)], [(1, 10)]
+    init_components_ledger(
+        spark.createDataFrame(seed, "src long, dst long"), path, buckets=4
+    )
+    # a bridge first, so the remap table is non-empty: {10 → 0}
+    components_ledger_ingest(
+        spark.createDataFrame(bridge, "src long, dst long"), path
+    )
+    remap_dir = os.path.join(path, "remaps")
+    before = _dir_bytes(remap_dir)
+    assert any(k.endswith(".parquet") for k in before)
+    # new ids onto existing clusters: 2 → root 0, 12 → 11 → root 0,
+    # 31 → 30 (both new)
+    attach = [(2, 0), (12, 11), (31, 30)]
+    swaps = _count_swaps(monkeypatch)
+    components_ledger_ingest(
+        spark.createDataFrame(attach, "src long, dst long"), path
+    )
+    assert swaps == []
+    assert _dir_bytes(remap_dir) == before
+    assert _ledger_report(spark, path) == _cc_of(spark, [seed, bridge, attach])
+
+
+def test_components_ledger_bridge_swaps_remaps_once(
+    spark, tmp_path, monkeypatch
+):
+    import os
+
+    from muller_spark.operators.components import (
+        components_ledger_ingest,
+        init_components_ledger,
+    )
+
+    path = os.path.join(str(tmp_path), "cl")
+    seed, bridge = [(1, 0), (11, 10), (21, 20)], [(11, 1), (22, 21)]
+    init_components_ledger(
+        spark.createDataFrame(seed, "src long, dst long"), path, buckets=4
+    )
+    swaps = _count_swaps(monkeypatch)
+    components_ledger_ingest(
+        spark.createDataFrame(bridge, "src long, dst long"), path
+    )
+    assert swaps == [os.path.join(path, "remaps")]
+    remaps = {
+        tuple(r)
+        for r in spark.read.parquet(os.path.join(path, "remaps")).collect()
+    }
+    assert remaps == {(10, 0)}  # the demoted root; 22 is a new id
+    assert _ledger_report(spark, path) == _cc_of(spark, [seed, bridge])
+
+
+def test_components_ledger_attach_ingest_job_budget(spark, tmp_path):
+    """An attach-only ingest on a fixed tiny ledger stays within its
+    Spark-job budget: the reduced graph already is a star forest (no
+    star round), nothing is demoted (no remap rewrite) and every
+    ledger read uses the pinned schema (no inference job).  The count
+    is of driver actions, so it does not depend on the host."""
+    import os
+
+    from muller_spark.operators.components import (
+        components_ledger_ingest,
+        init_components_ledger,
+    )
+
+    path = os.path.join(str(tmp_path), "cl")
+    init_components_ledger(
+        spark.createDataFrame([(1, 0), (11, 10)], "src long, dst long"),
+        path, buckets=4,
+    )
+    batch = spark.createDataFrame([(2, 0), (12, 11)], "src long, dst long")
+    sc = spark.sparkContext
+    group = f"components-ingest-budget-{id(batch)}"
+    sc.setJobGroup(group, "attach-only components ledger ingest")
+    try:
+        components_ledger_ingest(batch, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    # 28 jobs measured with this change (under AQE every materialized
+    # query stage is its own job); the same ingest took 45 before the
+    # star-forest exit, the remap-rewrite skip and the pinned-schema reads
+    assert jobs <= 28
+    assert _ledger_report(spark, path) == {
+        0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 12: 10
+    }

@@ -78,7 +78,7 @@ _RECENTLY_TOUCHED = {
     "q_neardup_ledger", "q_curation_pipeline",
     "q_agg_ledger", "q_hll_ledger", "q_mg_ledger", "q_quantile_ledger",
     "q_quantile_compacted", "q_hamming_ledger",
-    "q_flow_keeplist", "q_minhash_portable",
+    "q_flow_keeplist", "q_minhash_portable", "q_keep_best_ledger",
 }
 _ORACLE_SMOKE = set(sorted(_QUERIES)[::4]) | (
     _RECENTLY_TOUCHED & set(_QUERIES)
