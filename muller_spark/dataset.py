@@ -21,6 +21,8 @@ partition-local index), never through a driver collect.
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 from typing import Any, Callable, Iterable, Mapping, Sequence
 
@@ -46,6 +48,8 @@ from muller_spark.schema import (
     spark_type_for,
 )
 from muller_spark.versioning.log import FIRST_COMMIT, CommitLog, Snapshot
+
+_log = logging.getLogger("muller_spark")
 
 
 class TensorView:
@@ -124,6 +128,12 @@ class Dataset:
         self._work_df = self._read_snapshot_df(snap)
         self._committed_count = snap.row_count
         self._pending: dict[str, list] = {}
+        # pending cell edits, tensor → {row_id: value}, folded into the
+        # table as one projection at flush (``_apply_edits``)
+        self._edits: dict[str, dict[int, Any]] = {}
+        # the change record of the next commit (see versioning/log.py)
+        self._edited: set[str] = set()
+        self._ids_stable = True
         self._rewrite_needed = False
         self._dirty = False
 
@@ -139,11 +149,18 @@ class Dataset:
         return self.spark.createDataFrame([], T.StructType(fields))
 
     def _read_snapshot_df(self, snap: Snapshot) -> DataFrame:
-        """Pure: materialize a snapshot's table state (no instance mutation)."""
+        """Pure: materialize a snapshot's table state (no instance mutation).
+        Reads with the snapshot's stored schema, so opening a snapshot
+        runs no footer-inference job; a data dir written before a
+        tensor existed reads that column as NULL."""
         if not snap.data_dirs:
             return self._empty_df(dict(snap.tensor_meta))
         paths = [os.path.join(self.path, d) for d in snap.data_dirs]
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        if snap.schema_json:
+            schema = T.StructType.fromJson(json.loads(snap.schema_json))
+            df = self.spark.read.schema(schema).parquet(*paths)
+        else:
+            df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
         for name, meta in snap.tensor_meta.items():
             if name not in df.columns:
                 df = df.withColumn(
@@ -173,6 +190,7 @@ class Dataset:
         self._flush_pending()
         meta = {"htype": htype, "dtype": dtype, "info": info}
         self.tensor_meta[name] = meta
+        self._edited.add(name)
         self._work_df = self._work_df.withColumn(
             name, F.lit(None).cast(spark_type_for(htype, dtype))
         )
@@ -191,6 +209,7 @@ class Dataset:
         self._require_tensor(name)
         self._flush_pending()
         del self.tensor_meta[name]
+        self._edited.add(name)
         self._work_df = self._work_df.drop(name)
         shape_col = f"_{name}_shape"
         if shape_col in self.tensor_meta:
@@ -208,6 +227,7 @@ class Dataset:
             (new_name if k == name else k): v for k, v in self.tensor_meta.items()
         }
         self._work_df = self._work_df.withColumnRenamed(name, new_name)
+        self._edited |= {name, new_name}
         self._dirty = self._rewrite_needed = True
 
     # ------------------------------------------------------------------
@@ -249,6 +269,10 @@ class Dataset:
         self._dirty = True
 
     def _flush_pending(self) -> None:
+        self._flush_appends()
+        self._apply_edits()
+
+    def _flush_appends(self) -> None:
         if not any(self._pending.values()):
             self._pending = {}
             return
@@ -277,15 +301,34 @@ class Dataset:
     def _update_cell(self, tensor: str, index: int, value: Any) -> None:
         self._check_writable()
         self._require_tensor(tensor)
-        self._flush_pending()
-        self._work_df = self._work_df.withColumn(
-            tensor,
-            F.when(
-                F.col(ROW_ID_COL) == F.lit(index),
-                F.lit(_coerce(value)).cast(self._work_df.schema[tensor].dataType),
-            ).otherwise(F.col(tensor)),
-        )
+        # staged appends get their row ids first, so an edit may target them
+        self._flush_appends()
+        self._edits.setdefault(tensor, {})[int(index)] = _coerce(value)
+        self._edited.add(tensor)
         self._dirty = self._rewrite_needed = True
+
+    def _apply_edits(self) -> None:
+        """Fold every pending cell edit into the table as ONE projection:
+        per edited tensor, a literal ``row_id → value`` map, so N edits
+        add one plan node instead of N nested ``CASE`` layers."""
+        if not self._edits:
+            return
+        schema = self._work_df.schema
+        rid = F.col(ROW_ID_COL)
+        cols = []
+        for name in self._work_df.columns:
+            col = F.col(f"`{name}`")
+            edits = self._edits.get(name)
+            if edits:
+                dtype = schema[name].dataType
+                m = F.create_map(*[
+                    x for k, v in edits.items()
+                    for x in (F.lit(k).cast("long"), F.lit(v).cast(dtype))
+                ])
+                col = F.when(F.map_contains_key(m, rid), F.element_at(m, rid)).otherwise(col)
+            cols.append(col.alias(name))
+        self._work_df = self._work_df.select(*cols)
+        self._edits = {}
 
     def __setitem__(self, index: int, sample: Mapping[str, Any]) -> None:
         for tensor, value in sample.items():
@@ -303,6 +346,7 @@ class Dataset:
             self._work_df.filter(~F.col(ROW_ID_COL).isin(indices))
         )
         self._work_df = _renumber(self._work_df)
+        self._ids_stable = False
         self._dirty = self._rewrite_needed = True
 
     # ------------------------------------------------------------------
@@ -707,12 +751,79 @@ class Dataset:
             .orderBy(F.col("_bm25_score").desc(), F.col(ROW_ID_COL).asc())
         )
 
+    def _refresh_route(
+        self, operator: str, tensor: str, indexed_commit: "str | None",
+        can_reassign: bool,
+    ) -> "tuple[str, Snapshot | None]":
+        """Decide how an index built at ``indexed_commit`` catches up
+        with HEAD, from the change records (``Snapshot.extra``, see
+        versioning/log.py) on HEAD's first-parent chain:
+
+        - ``noop``: the index is already at HEAD;
+        - ``delta``: every step kept row ids stable and none edited
+          ``tensor`` — the index lacks exactly the rows with
+          ``_row_id >= indexed.row_count``;
+        - ``reassign`` (vector indexes, ``can_reassign``): ids stable
+          but ``tensor`` cells were edited — re-assign every row to
+          the existing centroids, no retrain;
+        - ``rebuild``: anything else — a step renumbered or dropped
+          rows, a step has no change record, or the indexed commit is
+          not on the chain.
+
+        Returns ``(route, indexed snapshot or None)`` and logs one
+        structured record on the ``muller_spark`` logger."""
+        head = self._snapshot
+        route, reason, base = "rebuild", "", None
+        if indexed_commit == head.commit_id:
+            route, reason, base = "noop", "index already at HEAD", head
+        else:
+            edited, cur = False, head
+            try:
+                while cur.commit_id != indexed_commit:
+                    change = cur.extra or {}
+                    if "ids_stable" not in change:
+                        reason = f"commit {cur.commit_id[:12]} has no change record"
+                        break
+                    if not change["ids_stable"]:
+                        reason = f"commit {cur.commit_id[:12]} renumbered or dropped rows"
+                        break
+                    edited = edited or tensor in change.get("edited", ())
+                    if not cur.parent_ids:
+                        reason = "indexed commit is not on HEAD's first-parent chain"
+                        break
+                    cur = self.log.get_snapshot(cur.parent_ids[0])
+                else:
+                    if not edited:
+                        route, base = "delta", cur
+                        reason = f"rows >= {cur.row_count} appended"
+                    elif can_reassign:
+                        route, base = "reassign", cur
+                        reason = f"{tensor!r} cells edited, row ids stable"
+                    else:
+                        reason = f"{tensor!r} cells edited"
+            except KeyError:
+                reason = "a snapshot on the chain is missing"
+        _log.info(
+            "%s %s: %s -> %s via %s (%s)", operator, tensor,
+            (indexed_commit or "?")[:12], head.commit_id[:12], route, reason,
+            extra={
+                "operator": operator, "tensor": tensor,
+                "indexed_commit": indexed_commit, "head_commit": head.commit_id,
+                "route": route, "reason": reason,
+            },
+        )
+        return route, base
+
     def update_index(self, tensor: str):
         """Refresh a stale inverted index (reference
-        ``inverted_index_vectorized_ops.py:146`` ``_update_old_index`` /
-        ``:220`` update-or-create decision): after append-only commits,
-        tokenize and merge ONLY the delta rows — O(delta); after a
-        rewrite (update/pop), rebuild, since row ids were renumbered.
+        ``inverted_index_vectorized.py:146`` ``_update_old_index`` /
+        ``:220`` update-or-create decision).  The route comes from the
+        change records between the indexed commit and HEAD
+        (``_refresh_route``): when every step kept row ids stable and
+        none edited ``tensor``, only the rows appended since — ``_row_id
+        >= indexed.row_count``, whether by commits or merges — are
+        tokenized and appended as new posting files
+        (``InvertedIndex.update``); otherwise the index is rebuilt.
         No-op when the index already matches HEAD."""
         from muller_spark.index.inverted import InvertedIndex
 
@@ -720,18 +831,13 @@ class Dataset:
         if not self.fs.exists(os.path.join(path, "manifest.json")):
             raise ValueError(f"no index on {tensor!r}; create_index_vectorized first")
         idx = InvertedIndex(self.spark, path)
-        indexed_commit = idx.manifest.get("commit_id")
-        if indexed_commit == self._snapshot.commit_id:
-            return idx
-        try:
-            old_snap = self.log.get_snapshot(indexed_commit)
-        except KeyError:
-            old_snap = None
-        append_only = old_snap is not None and set(old_snap.data_dirs) <= set(
-            self._snapshot.data_dirs
+        route, base = self._refresh_route(
+            "update_index", tensor, idx.manifest.get("commit_id"), can_reassign=False
         )
-        if append_only:
-            delta = self.df.filter(F.col(ROW_ID_COL) >= old_snap.row_count)
+        if route == "noop":
+            return idx
+        if route == "delta":
+            delta = self.df.filter(F.col(ROW_ID_COL) >= base.row_count)
             return idx.update(delta, commit_id=self._snapshot.commit_id)
         m = idx.manifest
         return InvertedIndex.build(
@@ -1018,58 +1124,81 @@ class Dataset:
             self.fs.rmtree(idx_dir)
 
     def update_vector_index(self, tensor_name: str, index_name: str = "default") -> None:
-        """Refresh a stale index after commits (reference
-        ``update_vector_index``, ``vector_search_ops.py:51-82``): rows not
-        yet in the assignment table are assigned to the EXISTING centroids
-        and appended — O(delta), no retrain, no rebuild.  No-op when the
-        index already matches HEAD."""
-        import json as _json
+        """Refresh a stale index after commits and merges (reference
+        ``update_vector_index``, ``vector_search_ops.py:51-82``), routed
+        by the change records between the indexed commit and HEAD
+        (``_refresh_route``):
 
+        - ``delta`` — the rows appended since (``_row_id >=
+          indexed.row_count``) are assigned to the EXISTING centroids
+          (and codebooks) and appended: O(delta), no retrain;
+        - ``reassign`` — ids stable but ``tensor_name`` cells edited:
+          every row is re-assigned to the existing centroids and the
+          assignment table (IVFPQ codes, disk-graph vectors and cell
+          graphs) is rewritten, no retrain;
+        - ``rebuild`` — rows were renumbered or dropped, or the history
+          is unknown: the index is built again from its manifest.
+
+        No-op when the index already matches HEAD; an index type with
+        no persisted artifact only has its manifest re-stamped."""
         from muller_spark.errors import VectorIndexNotFoundError
-        from muller_spark.index.vector import append_ivf_assignments
 
         m = self._vector_manifest(tensor_name, index_name)
         if m is None:
             raise VectorIndexNotFoundError(f"{tensor_name}/{index_name}")
-        if m.get("commit_id") == self._snapshot.commit_id:
+        route, base = self._refresh_route(
+            "update_vector_index", tensor_name, m.get("commit_id"), can_reassign=True
+        )
+        if route == "noop":
             return
         idx_dir = os.path.join(self.path, "_indexes", "vector", tensor_name, index_name)
+        hyper = m.get("hyper", {})
+        loaded = (tensor_name, index_name) in self._vector_loaded
+        if route == "rebuild":
+            self.create_vector_index(
+                tensor_name, index_name, m["index_type"], m["metric"], **hyper
+            )
+            if loaded:
+                self.load_vector_index(tensor_name, index_name)
+            return
+        rows = self.df.select(ROW_ID_COL, tensor_name)
+        if route == "delta":
+            rows = rows.filter(F.col(ROW_ID_COL) >= base.row_count)
+        replace = route == "reassign"
         if os.path.isdir(os.path.join(idx_dir, "codes")):
-            from muller_spark.index.vector import append_ivfpq_codes
+            from muller_spark.index.vector import _write_ivfpq_codes
 
-            known = self.spark.read.parquet(os.path.join(idx_dir, "codes")).select("id")
-            delta = self.df.select(ROW_ID_COL, tensor_name).join(
-                known.withColumnRenamed("id", ROW_ID_COL), ROW_ID_COL, "left_anti"
-            )
-            append_ivfpq_codes(delta, tensor_name, ROW_ID_COL, idx_dir)
+            _write_ivfpq_codes(rows, tensor_name, ROW_ID_COL, idx_dir, replace=replace)
         elif os.path.isdir(os.path.join(idx_dir, "adjacency")):
-            # disk graph: rebuild only the delta's touched cells
-            from muller_spark.index.graph import append_graph_vectors
+            from muller_spark.index.graph import append_graph_vectors, reassign_graph_vectors
 
-            known = self.spark.read.parquet(
-                os.path.join(idx_dir, "vectors")
-            ).select("id")
-            delta = self.df.select(ROW_ID_COL, tensor_name).join(
-                known.withColumnRenamed("id", ROW_ID_COL), ROW_ID_COL, "left_anti"
-            )
-            append_graph_vectors(
-                delta, tensor_name, ROW_ID_COL, idx_dir,
-                R=int(m.get("hyper", {}).get("R", 12)),
-            )
+            refresh = reassign_graph_vectors if replace else append_graph_vectors
+            refresh(rows, tensor_name, ROW_ID_COL, idx_dir, R=int(hyper.get("R", 12)))
         elif os.path.isdir(os.path.join(idx_dir, "assign")):
-            known = self.spark.read.parquet(os.path.join(idx_dir, "assign")).select("id")
-            delta = self.df.select(ROW_ID_COL, tensor_name).join(
-                known.withColumnRenamed("id", ROW_ID_COL), ROW_ID_COL, "left_anti"
-            )
-            qb = m.get("hyper", {}).get("quantize_bits")
-            append_ivf_assignments(
-                delta, tensor_name, ROW_ID_COL, idx_dir,
-                quantize_bits=int(qb) if qb is not None else None,
-            )
+            from muller_spark.index.vector import _write_ivf_assignments, append_ivf_assignments
+
+            qb = hyper.get("quantize_bits")
+            qb = int(qb) if qb is not None else None
+            if replace:
+                _write_ivf_assignments(
+                    rows, tensor_name, ROW_ID_COL, idx_dir, quantize_bits=qb, replace=True
+                )
+            else:
+                append_ivf_assignments(rows, tensor_name, ROW_ID_COL, idx_dir, quantize_bits=qb)
         m["commit_id"] = self._snapshot.commit_id
-        self.fs.write_text(os.path.join(idx_dir, "manifest.json"), _json.dumps(m))
-        if (tensor_name, index_name) in self._vector_loaded:
-            self.load_vector_index(tensor_name, index_name)
+        self.fs.write_text(os.path.join(idx_dir, "manifest.json"), json.dumps(m))
+        state = self._vector_loaded.get((tensor_name, index_name))
+        if state is not None:
+            # centroids and codebooks are unchanged: re-open only the
+            # tables the refresh wrote to (a held read never sees files
+            # added after it was opened)
+            state["manifest"] = m
+            for table in ("assign", "codes"):
+                held = state.get(f"{table}_df")
+                if held is not None:
+                    state[f"{table}_df"] = self.spark.read.schema(held.schema).parquet(
+                        os.path.join(idx_dir, table)
+                    )
 
     # ------------------------------------------------------------------
     # version control
@@ -1121,6 +1250,7 @@ class Dataset:
             row_count=row_count,
             next_uuid=self._next_uuid,
             commit_id=commit_id,
+            extra={"ids_stable": self._ids_stable, "edited": sorted(self._edited)},
         )
         self._load(snap)
         return snap.commit_id
@@ -1199,7 +1329,10 @@ class Dataset:
     ) -> str:
         """Three-way merge of ``target_id`` into the current branch
         (semantics from reference ``merge.py:960-1160``; see
-        muller_spark/versioning/merge.py for the resolution matrix)."""
+        muller_spark/versioning/merge.py for the resolution matrix).
+        The merge commit's row count, schema and change record (relative
+        to the current branch) come from the merge's own census; the
+        written table is not read back."""
         from muller_spark.versioning.merge import three_way_merge
 
         self._check_writable()
@@ -1227,7 +1360,9 @@ class Dataset:
             return theirs.commit_id
 
         base = self.log.get_snapshot(lca_id)
-        merged_df, merged_meta, next_uuid = three_way_merge(
+        commit_id = self.log.new_commit_id()
+        rel_dir = os.path.join("data", commit_id)
+        out = three_way_merge(
             self,
             ours_df=self._read_snapshot_df(ours),
             theirs_df=self._read_snapshot_df(theirs),
@@ -1240,22 +1375,19 @@ class Dataset:
             pop_resolution=pop_resolution,
             delete_removed_tensors=delete_removed_tensors,
             force=force,
-            next_uuid=max(ours.next_uuid, theirs.next_uuid),
+            out_dir=os.path.join(self.path, rel_dir),
         )
-        commit_id = self.log.new_commit_id()
-        rel_dir = os.path.join("data", commit_id)
-        merged_df.write.mode("overwrite").parquet(os.path.join(self.path, rel_dir))
-        written = self.spark.read.parquet(os.path.join(self.path, rel_dir))
         snap = self.log.commit(
             parent_ids=[ours.commit_id, theirs.commit_id],
             branch=self.branch,
             message=f"merge {target_id} into {self.branch}",
             data_dirs=[rel_dir],
-            schema_json=written.schema.json(),
-            tensor_meta=merged_meta,
-            row_count=written.count(),
-            next_uuid=next_uuid,
+            schema_json=out.schema_json,
+            tensor_meta=out.meta,
+            row_count=out.row_count,
+            next_uuid=max(ours.next_uuid, theirs.next_uuid),
             commit_id=commit_id,
+            extra=out.change,
         )
         self._load(snap)
         return snap.commit_id

@@ -27,6 +27,15 @@ Spark-first re-expression of the reference's hybrid full-text engine
 - **staleness**: the manifest records the dataset commit id; searches
   against a moved HEAD fall back to scan (reference
   ``filter_vectorized.py:476-492``).
+- **update**: the delta's posting rows are tokenized by the same helper
+  as ``build`` and ADDED as new files (``delta-<commit>-*``, one per
+  touched shard) to the shard directories; nothing indexed is rewritten.
+  The manifest lists the appended segments, so files of an update that
+  crashed before its manifest write are removed by the next update.
+  ``optimize()`` compacts the appended files.
+- **swaps** (``optimize``, ``reshard``, docstats and typo-key rewrites)
+  write the new table beside the live one and promote it by
+  rename-rename-rmtree; an interrupted promote heals on the next open.
 
 Scalar (non-text) tensors are indexed by value string, mirroring the
 reference's hashed-scalar postings (``:169-180``).
@@ -37,6 +46,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import uuid
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -97,6 +107,163 @@ def tokenize_py(text: str, case_sensitive: bool = False,
     return toks
 
 
+def _postings_frame(
+    df: DataFrame,
+    tensor: str,
+    id_col: str,
+    num_shards: int,
+    case_sensitive: bool,
+    stop_words: Sequence[str] | None,
+    is_text: bool,
+    positions: bool,
+) -> "tuple[DataFrame, bool]":
+    """Tokenize ``df[tensor]`` into posting rows ``(term, id[, pos],
+    shard)``, clustered one shard per partition and sorted by ``(term,
+    id)`` — the shared core of ``build`` and ``update``.  Returns the
+    frame and whether the Python (CJK) tokenizer was chosen."""
+    col = F.col(tensor)
+    has_cjk = False
+    if is_text:
+        # one bounded probe job decides the tokenizer for the whole
+        # build: pure regex split stays JVM-side (the fast path);
+        # corpora containing CJK route through the Arrow-batched
+        # Python tokenizer so index-side and query-side tokens agree
+        # (tokenize_py is used for both)
+        has_cjk = bool(df.filter(col.rlike("[一-鿿㐀-䶿]")).limit(1).take(1))
+        if has_cjk:
+            from pyspark.sql.types import ArrayType, StringType
+
+            stop_set = frozenset(stop_words) if stop_words else None
+            # lambda (not a hinted def): stringified hints from
+            # `from __future__ import annotations` are unsupported
+            # by pandas_udf signature inference in pyspark 4.1
+            tok_udf = F.pandas_udf(
+                lambda batch: batch.map(
+                    lambda t: tokenize_py(
+                        t, case_sensitive=case_sensitive, stop_words=stop_set
+                    )
+                ),
+                ArrayType(StringType()),
+            )
+            tok_arr = tok_udf(col)
+            if positions:
+                exploded = df.select(
+                    F.col(id_col).alias("id"),
+                    F.posexplode(tok_arr).alias("pos", "term"),
+                ).filter(F.col("term") != "")
+            else:
+                exploded = (
+                    df.select(
+                        F.col(id_col).alias("id"),
+                        F.explode(tok_arr).alias("term"),
+                    )
+                    .filter(F.col("term") != "")
+                )
+        else:
+            from muller_spark.plans.conditions import TOKEN_SPLIT_REGEX_CS
+
+            if case_sensitive:
+                base, split_re = col, TOKEN_SPLIT_REGEX_CS
+            else:
+                base, split_re = F.lower(col), TOKEN_SPLIT_REGEX
+            terms = F.split(base, split_re)
+            if positions:
+                # positions index the FILTERED token stream (empties
+                # and stop words removed before numbering), matching
+                # the query-side tokenize_py stream — adjacency is
+                # over surviving tokens on both sides
+                kept = F.filter(terms, lambda t: t != "")
+                if stop_words:
+                    stop_arr = F.array(*[F.lit(w) for w in stop_words])
+                    kept = F.filter(
+                        kept, lambda t: ~F.array_contains(stop_arr, t)
+                    )
+                exploded = df.select(
+                    F.col(id_col).alias("id"),
+                    F.posexplode(kept).alias("pos", "term"),
+                )
+            else:
+                exploded = (
+                    df.select(
+                        F.col(id_col).alias("id"),
+                        F.explode(terms).alias("term"),
+                    )
+                    .filter(F.col("term") != "")
+                )
+                if stop_words:
+                    exploded = exploded.filter(
+                        ~F.col("term").isin(list(stop_words))
+                    )
+    else:
+        # scalar index: one "term" per cell, the string form of the value
+        exploded = df.select(
+            F.col(id_col).alias("id"), col.cast("string").alias("term")
+        ).filter(F.col("term").isNotNull())
+
+    if not positions:
+        exploded = exploded.distinct()  # one (term, id) row per pair
+    # positional rows are unique by construction (one per token slot)
+    return _sharded(exploded, num_shards), has_cjk
+
+
+def _sharded(postings: DataFrame, num_shards: int) -> DataFrame:
+    return (
+        postings
+        .withColumn("shard", F.pmod(F.xxhash64("term"), F.lit(num_shards)))
+        .repartition(num_shards, "shard")
+        .sortWithinPartitions("term", "id")
+    )
+
+
+def _postings_stats(postings: DataFrame) -> dict:
+    """Manifest fields of a freshly written posting table, from one
+    aggregate: ``n_postings`` (so the aggregate fast path's totality
+    check never re-scans the table), ``max_id`` (so ``update`` can tell
+    a delta of new ids from an overlapping one), no appended segments
+    yet, and a fresh ``postings_id`` (so memoized reads re-open)."""
+    r = postings.agg(
+        F.count(F.lit(1)).alias("n"), F.max("id").alias("hi")
+    ).first()
+    hi = r["hi"] if isinstance(r["hi"], (int, float, str)) else None
+    return {
+        "n_postings": int(r["n"]),
+        "max_id": hi,
+        "segments": [],
+        "postings_id": uuid.uuid4().hex,
+    }
+
+
+def _promote(fs, live: str) -> None:
+    """Replace ``live`` with the fully written ``live + '_new'`` by
+    rename-rename-rmtree: the live table is never deleted before its
+    replacement is complete, and the one window with no live directory
+    (between the two renames) is closed by :func:`_recover_promote` on
+    the next open — the same discipline as ``ledger._swap_log_dir``,
+    through the index's filesystem seam."""
+    new, old = live + "_new", live + "_old"
+    if fs.isdir(old):
+        fs.rmtree(old)  # stale from an earlier crash
+    if fs.isdir(live):
+        fs.rename(live, old)
+    fs.rename(new, live)
+    if fs.isdir(old):
+        fs.rmtree(old)
+
+
+def _recover_promote(fs, live: str) -> None:
+    """Finish a :func:`_promote` interrupted by a crash: with no live
+    directory, promote a complete ``_new`` (its ``_SUCCESS`` marker
+    present) or else restore ``_old``; drop ``_old`` once live is back."""
+    new, old = live + "_new", live + "_old"
+    if not fs.isdir(live):
+        if fs.exists(os.path.join(new, "_SUCCESS")):
+            fs.rename(new, live)
+        elif fs.isdir(old):
+            fs.rename(old, live)
+    if fs.isdir(old) and fs.isdir(live):
+        fs.rmtree(old)
+
+
 class InvertedIndex:
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
@@ -106,16 +273,39 @@ class InvertedIndex:
         # memoized lazy table plans (round 13, guide §2.4): every
         # spark.read.parquet call schedules a footer/schema-inference
         # job, which on the warm lookup path was one job per search
-        # just to re-learn an unchanged schema.  Plans are lazy, so
-        # reuse is safe; every in-instance mutation (update, swap,
-        # reshard, typo-key rewrite) calls _invalidate_reads().
-        # External writers are excluded by the single-writer contract.
+        # just to re-learn an unchanged schema.  A held read never sees
+        # files added after it was opened, so the memo is keyed by the
+        # manifest text it was opened under: every mutation (update,
+        # swap, reshard, typo-key rewrite) writes a new manifest, and
+        # ``_revalidate`` re-opens when the manifest on disk moved —
+        # also when ANOTHER instance on the same path wrote it.
         self._postings_df: DataFrame | None = None
         self._typo_keys_df: DataFrame | None = None
+        self._read_key: str | None = None
 
     def _invalidate_reads(self) -> None:
         self._postings_df = None
         self._typo_keys_df = None
+
+    def _manifest_path(self) -> str:
+        return os.path.join(self.path, "manifest.json")
+
+    def _revalidate(self) -> None:
+        """Re-read the manifest; drop the memoized reads when it differs
+        from the one they were opened under."""
+        raw = self.fs.read_text(self._manifest_path())
+        if raw != self._read_key:
+            self._invalidate_reads()
+            self._manifest = json.loads(raw)
+            self._read_key = raw
+
+    def _write_manifest(self, m: dict) -> None:
+        """Persist ``m``.  Reads memoized from here on were opened after
+        the mutation that wrote ``m`` (every mutation invalidates them
+        first), so they stay valid under the new manifest."""
+        raw = json.dumps(m)
+        self.fs.write_text(self._manifest_path(), raw)
+        self._manifest, self._read_key = m, raw
 
     # -- build -----------------------------------------------------------
     @classmethod
@@ -136,105 +326,16 @@ class InvertedIndex:
         _write_stats: bool = True,
     ) -> "InvertedIndex":
         spark = df.sparkSession
-        col = F.col(tensor)
-        if is_text:
-            # one bounded probe job decides the tokenizer for the whole
-            # build: pure regex split stays JVM-side (the fast path);
-            # corpora containing CJK route through the Arrow-batched
-            # Python tokenizer so index-side and query-side tokens agree
-            # (tokenize_py is used for both)
-            has_cjk = bool(df.filter(col.rlike("[一-鿿㐀-䶿]")).limit(1).take(1))
-            if has_cjk:
-                from pyspark.sql.types import ArrayType, StringType
-
-                stop_set = frozenset(stop_words) if stop_words else None
-                # lambda (not a hinted def): stringified hints from
-                # `from __future__ import annotations` are unsupported
-                # by pandas_udf signature inference in pyspark 4.1
-                tok_udf = F.pandas_udf(
-                    lambda batch: batch.map(
-                        lambda t: tokenize_py(
-                            t, case_sensitive=case_sensitive, stop_words=stop_set
-                        )
-                    ),
-                    ArrayType(StringType()),
-                )
-                tok_arr = tok_udf(col)
-                if positions:
-                    exploded = df.select(
-                        F.col(id_col).alias("id"),
-                        F.posexplode(tok_arr).alias("pos", "term"),
-                    ).filter(F.col("term") != "")
-                else:
-                    exploded = (
-                        df.select(
-                            F.col(id_col).alias("id"),
-                            F.explode(tok_arr).alias("term"),
-                        )
-                        .filter(F.col("term") != "")
-                    )
-            else:
-                from muller_spark.plans.conditions import TOKEN_SPLIT_REGEX_CS
-
-                if case_sensitive:
-                    base, split_re = col, TOKEN_SPLIT_REGEX_CS
-                else:
-                    base, split_re = F.lower(col), TOKEN_SPLIT_REGEX
-                terms = F.split(base, split_re)
-                if positions:
-                    # positions index the FILTERED token stream (empties
-                    # and stop words removed before numbering), matching
-                    # the query-side tokenize_py stream — adjacency is
-                    # over surviving tokens on both sides
-                    kept = F.filter(terms, lambda t: t != "")
-                    if stop_words:
-                        stop_arr = F.array(*[F.lit(w) for w in stop_words])
-                        kept = F.filter(
-                            kept, lambda t: ~F.array_contains(stop_arr, t)
-                        )
-                    exploded = df.select(
-                        F.col(id_col).alias("id"),
-                        F.posexplode(kept).alias("pos", "term"),
-                    )
-                else:
-                    exploded = (
-                        df.select(
-                            F.col(id_col).alias("id"),
-                            F.explode(terms).alias("term"),
-                        )
-                        .filter(F.col("term") != "")
-                    )
-                    if stop_words:
-                        exploded = exploded.filter(
-                            ~F.col("term").isin(list(stop_words))
-                        )
-        else:
-            has_cjk = False
-            # scalar index: one "term" per cell, the string form of the value
-            exploded = df.select(
-                F.col(id_col).alias("id"), col.cast("string").alias("term")
-            ).filter(F.col("term").isNotNull())
-
-        if not positions:
-            exploded = exploded.distinct()  # one (term, id) row per pair
-        # positional rows are unique by construction (one per token slot)
-        postings = (
-            exploded
-            .withColumn("shard", F.pmod(F.xxhash64("term"), F.lit(num_shards)))
-            .repartition(num_shards, "shard")
-            .sortWithinPartitions("term", "id")
+        postings, has_cjk = _postings_frame(
+            df, tensor, id_col, num_shards, case_sensitive, stop_words,
+            is_text, positions,
         )
         postings.write.mode("overwrite").partitionBy("shard").parquet(
             os.path.join(path, "postings")
         )
-        # metadata-only count (parquet row-group stats): recorded in the
-        # manifest so consumers (the aggregate count fast path's totality
-        # check) never re-scan the posting table at plan time
-        n_postings = int(
-            spark.read.parquet(os.path.join(path, "postings")).count()
-        )
+        fs = get_fs(path)
+        fs.makedirs(path)
         manifest = {
-            "n_postings": n_postings,
             "tensor": tensor,
             "id_col": id_col,
             "index_type": index_type,
@@ -245,9 +346,8 @@ class InvertedIndex:
             "is_text": is_text,
             "tokenizer": ("cjk_fmm" if has_cjk else "regex") if is_text else "scalar",
             "positions": bool(positions),
+            **_postings_stats(spark.read.parquet(os.path.join(path, "postings"))),
         }
-        fs = get_fs(path)
-        fs.makedirs(path)
         fs.write_text(os.path.join(path, "manifest.json"), json.dumps(manifest))
         out = cls(spark, path)
         out._manifest = manifest
@@ -260,23 +360,25 @@ class InvertedIndex:
     @property
     def manifest(self) -> dict:
         if self._manifest is None:
-            self._manifest = json.loads(
-                self.fs.read_text(os.path.join(self.path, "manifest.json"))
-            )
+            self._manifest = json.loads(self.fs.read_text(self._manifest_path()))
         return self._manifest
 
+    def _postings_path(self) -> str:
+        return os.path.join(self.path, "postings")
+
     def _postings(self) -> DataFrame:
+        self._revalidate()
         if self._postings_df is None:
-            self._postings_df = self.spark.read.parquet(
-                os.path.join(self.path, "postings")
-            )
+            _recover_promote(self.fs, self._postings_path())
+            self._postings_df = self.spark.read.parquet(self._postings_path())
         return self._postings_df
 
     def _typo_keys(self) -> DataFrame:
+        self._revalidate()
         if self._typo_keys_df is None:
-            self._typo_keys_df = self.spark.read.parquet(
-                os.path.join(self.path, "typo_keys")
-            )
+            live = os.path.join(self.path, "typo_keys")
+            _recover_promote(self.fs, live)
+            self._typo_keys_df = self.spark.read.parquet(live)
         return self._typo_keys_df
 
     # -- search ----------------------------------------------------------
@@ -288,6 +390,7 @@ class InvertedIndex:
         edits per query token (default: the key table's depth) —
         requires typo keys (``build(..., typo_keys=d)`` or
         :meth:`enable_typo_match`)."""
+        self._revalidate()
         if search_type == "exact_match":
             return self._exact(query)
         if search_type == "fuzzy_match":
@@ -363,6 +466,7 @@ class InvertedIndex:
         only the query terms' shards plus that table — never a full
         posting scan; indexes built before docstats existed fall back
         to computing it on the fly."""
+        self._revalidate()
         if not self.manifest.get("positions"):
             raise ValueError(
                 "bm25 needs a positional index (tf = count of position "
@@ -429,28 +533,27 @@ class InvertedIndex:
 
     def _write_docstats(self) -> None:
         """Persist per-document post-filter token counts (id, dl) next
-        to the postings — one aggregate at build/update time so BM25
-        serving never re-scans the posting table for corpus stats.
-        Maintenance ops that only re-bucket rows (reshard, hot shards,
-        optimize) leave (term, id, pos) contents unchanged, so the
-        stats stay valid without a rewrite."""
-        stats_new = self._docstats_path() + "_new"
+        to the postings — one aggregate at build time so BM25 serving
+        never re-scans the posting table for corpus stats (``update``
+        appends the delta's rows instead).  Maintenance ops that only
+        re-bucket rows (reshard, hot shards, optimize) leave (term, id,
+        pos) contents unchanged, so the stats stay valid without a
+        rewrite."""
+        final = self._docstats_path()
         (
             self._postings()
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("dl"))
             .write.mode("overwrite")
-            .parquet(stats_new)
+            .parquet(final + "_new")
         )
-        final = self._docstats_path()
-        if self.fs.isdir(final):
-            self.fs.rmtree(final)
-        self.fs.rename(stats_new, final)
+        _promote(self.fs, final)
 
     def _docstats(self) -> DataFrame:
         """(id, dl) frame for BM25 — the persisted table when present,
         else computed from the postings (indexes built before docstats
         existed)."""
+        _recover_promote(self.fs, self._docstats_path())
         if self.fs.isdir(self._docstats_path()):
             return self.spark.read.parquet(self._docstats_path())
         return self._postings().groupBy("id").agg(
@@ -583,10 +686,7 @@ class InvertedIndex:
             "max_token_len": int(max_token_len),
             "n_postings": m["n_postings"],
         }
-        self.fs.write_text(
-            os.path.join(self.path, "manifest.json"), json.dumps(m)
-        )
-        self._manifest = m
+        self._write_manifest(m)
         return self
 
     def _write_typo_keys(self, max_edits: int, max_token_len: int,
@@ -603,18 +703,15 @@ class InvertedIndex:
                 ).otherwise(F.array(F.col("term")))
             ).alias("k"),
         ).withColumn("kshard", F.pmod(F.xxhash64("k"), F.lit(num_shards)))
-        out_path = os.path.join(self.path, "typo_keys_new")
+        live = os.path.join(self.path, "typo_keys")
         (
             keys.repartition(num_shards, "kshard")
             .sortWithinPartitions("k", "term")
             .write.mode("overwrite")
             .partitionBy("kshard")
-            .parquet(out_path)
+            .parquet(live + "_new")
         )
-        live = os.path.join(self.path, "typo_keys")
-        if self.fs.exists(live):
-            self.fs.rmtree(live)
-        self.fs.rename(out_path, live)
+        _promote(self.fs, live)
         self._invalidate_reads()
 
     def _typo(self, query: str, max_edits: "int | None" = None) -> DataFrame:
@@ -758,47 +855,135 @@ class InvertedIndex:
         )
 
     def update(self, df: DataFrame, commit_id: str | None = None) -> "InvertedIndex":
-        """Incremental maintenance after append-only commits (reference
-        ``update_index``, ``inverted_index_vectorized.py:397``): index
-        only the delta rows, merge posting lists per term, rewrite.  The
-        delta is usually tiny relative to the corpus, so the merge
-        shuffles O(delta terms), not the full posting table row count."""
-        import json
+        """Incremental maintenance after appends (reference
+        ``update_index``, ``inverted_index_vectorized.py:397``): tokenize
+        only ``df`` (the delta rows) and ADD its posting files — one per
+        touched shard — and, for a positional index, its docstats rows
+        to the existing tables; ``n_postings`` grows by the delta's
+        count.  Nothing already indexed is read, shuffled or rewritten.
 
+        The files are named ``delta-<commit id>-*`` and the manifest
+        lists the appended segments, so a crash between the append and
+        the manifest write is repaired by the next ``update``: segment
+        files the manifest does not list are removed before anything is
+        appended, and a retry lands the delta exactly once.
+
+        A delta whose ids overlap the indexed ones (its smallest id is
+        not above the manifest's ``max_id``) falls back to the full
+        row-level merge: union, ``distinct``, rewrite and swap — the
+        same result as indexing the union."""
         m = dict(self.manifest)
-        tmp_path = self.path + "_delta"
-        delta = InvertedIndex.build(
-            df, m["tensor"], tmp_path, id_col=m["id_col"],
-            index_type=m["index_type"], num_shards=m["num_shards"],
-            case_sensitive=m["case_sensitive"],
-            stop_words=m["stop_words"] or None, is_text=m["is_text"],
-            positions=m.get("positions", False),
-            _write_stats=False,  # throwaway delta index: stats never read
+        segment = commit_id or uuid.uuid4().hex
+        postings_dir = self._postings_path()
+        _recover_promote(self.fs, postings_dir)
+        self._drop_unlisted_segments(m.get("segments") or [])
+        stage = postings_dir + "_delta"
+        delta, _ = _postings_frame(
+            df, m["tensor"], m["id_col"], m["num_shards"],
+            m["case_sensitive"], m["stop_words"] or None, m["is_text"],
+            m.get("positions", False),
         )
+        delta.write.mode("overwrite").partitionBy("shard").parquet(stage)
+        staged = self.spark.read.schema(delta.schema).parquet(stage)
+        st = staged.agg(
+            F.count(F.lit(1)).alias("n"), F.min("id").alias("lo"),
+            F.max("id").alias("hi"),
+        ).first()
+        hi = m.get("max_id")
+        if st["n"] and "max_id" not in m:  # an index built before max_id
+            hi = self._postings().agg(F.max("id")).first()[0]
+        if st["n"] and hi is not None and st["lo"] <= hi:
+            self._merge_rewrite(m, staged, commit_id)
+        else:
+            if st["n"]:
+                self._append_segment(staged, stage, segment, m)
+                m["n_postings"] = int(m["n_postings"]) + int(st["n"])
+                m["max_id"] = st["hi"] if hi is None else max(hi, st["hi"])
+                m["segments"] = (m.get("segments") or []) + [segment]
+                m["postings_id"] = uuid.uuid4().hex
+                self._invalidate_reads()
+            m["commit_id"] = commit_id
+            self._refresh_derived(m)
+        self.fs.rmtree(stage)
+        if m.get("hot_terms"):
+            # hot-shard postings are a copy — refresh them from the merge
+            self.add_hot_shard(len(m["hot_terms"]))
+        return self
+
+    def _drop_unlisted_segments(self, listed: list) -> None:
+        """Remove appended segment files the manifest does not list —
+        the leftovers of an ``update`` that crashed before its manifest
+        write."""
+        keep = set(listed)
+        for d in (self._postings_path(), self._docstats_path()):
+            if not self.fs.isdir(d):
+                continue
+            for sub in self.fs.listdir(d):
+                full = os.path.join(d, sub)
+                names = self.fs.listdir(full) if sub.startswith("shard=") else [sub]
+                base = full if sub.startswith("shard=") else d
+                for name in names:
+                    seg = name[len("delta-"):].rsplit("-", 1)[0]
+                    if name.startswith("delta-") and seg not in keep:
+                        self.fs.remove(os.path.join(base, name))
+
+    def _append_segment(
+        self, staged: DataFrame, stage: str, segment: str, m: dict
+    ) -> None:
+        """Move the staged delta's posting files into the live shard
+        directories and, for a positional index with persisted
+        docstats, add the delta's (id, dl) rows — every file named
+        ``delta-<segment>-<n>``."""
+        stats = self._docstats_path()
+        with_stats = m.get("positions") and self.fs.isdir(stats)
+        if with_stats:
+            (
+                staged.groupBy("id").agg(F.count(F.lit(1)).alias("dl"))
+                .coalesce(1)
+                .write.mode("overwrite").parquet(stats + "_delta")
+            )
+        for sub in sorted(self.fs.listdir(stage)):
+            if sub.startswith("shard="):
+                self._move_parts(
+                    os.path.join(stage, sub),
+                    os.path.join(self._postings_path(), sub), segment,
+                )
+        if with_stats:
+            self._move_parts(stats + "_delta", stats, segment)
+            self.fs.rmtree(stats + "_delta")
+
+    def _move_parts(self, src_dir: str, dst_dir: str, segment: str) -> None:
+        self.fs.makedirs(dst_dir)
+        parts = [f for f in sorted(self.fs.listdir(src_dir)) if f.endswith(".parquet")]
+        for i, name in enumerate(parts):
+            self.fs.rename(
+                os.path.join(src_dir, name),
+                os.path.join(dst_dir, f"delta-{segment}-{i:05d}.parquet"),
+            )
+
+    def _merge_rewrite(self, m: dict, staged: DataFrame, commit_id) -> None:
+        """Overlapping delta: row-level merge of the whole posting table
+        with the delta (no per-term array ever materializes)."""
         cols = ["term", "id", "pos"] if m.get("positions") else ["term", "id"]
-        merged = (
+        merged = _sharded(
             self._postings().select(*cols)
-            .unionByName(delta._postings().select(*cols))
-            .distinct()  # row-level merge: no per-term array ever materializes
-            .withColumn("shard", F.pmod(F.xxhash64("term"), F.lit(m["num_shards"])))
-            .repartition(m["num_shards"], "shard")
-            .sortWithinPartitions("term", "id")
+            .unionByName(staged.select(*cols))
+            .distinct(),
+            m["num_shards"],
         )
-        out_path = os.path.join(self.path, "postings_new")
-        merged.write.mode("overwrite").partitionBy("shard").parquet(out_path)
-        old = os.path.join(self.path, "postings")
-        self.fs.rmtree(old)
-        self.fs.rename(out_path, old)
-        self.fs.rmtree(tmp_path)
-        self._invalidate_reads()
+        self._replace_postings(merged)
         if m.get("positions"):
             # refresh docstats BEFORE the fresh manifest lands: a crash
             # in between leaves old-manifest + new-stats (harmlessly
             # re-derivable), never fresh-looking metadata over stale
             # stats that would silently drop the delta docs from BM25
             self._write_docstats()
-        m["commit_id"] = commit_id
-        m["n_postings"] = int(self.spark.read.parquet(old).count())
+        m.update(_postings_stats(self._postings()), commit_id=commit_id)
+        self._refresh_derived(m)
+
+    def _refresh_derived(self, m: dict) -> None:
+        """Re-derive the typo-key table when the index has one, then
+        write the manifest ``m``."""
         if m.get("typo_keys"):
             # the deletion-key table derives from the term dictionary —
             # refresh it from the merged postings and re-pin the count
@@ -808,29 +993,27 @@ class InvertedIndex:
                 tk["max_edits"], tk["max_token_len"], m["num_shards"]
             )
             m["typo_keys"] = dict(tk, n_postings=m["n_postings"])
-        self.fs.write_text(os.path.join(self.path, "manifest.json"), json.dumps(m))
-        self._manifest = m
-        if m.get("hot_terms"):
-            # hot-shard postings are a copy — refresh them from the merge
-            self.add_hot_shard(len(m["hot_terms"]))
-        return self
+        self._write_manifest(m)
 
     # -- maintenance -----------------------------------------------------
-    def _swap_postings(self, new_postings: DataFrame, manifest_updates: dict) -> None:
-        """Write a replacement posting table atomically-ish (write to a
-        sibling dir, then rename over the old one) and persist manifest
-        changes."""
-        out_path = os.path.join(self.path, "postings_new")
-        new_postings.write.mode("overwrite").partitionBy("shard").parquet(out_path)
-        old = os.path.join(self.path, "postings")
-        self.fs.rmtree(old)
-        self.fs.rename(out_path, old)
+    def _replace_postings(self, new_postings: DataFrame) -> None:
+        """Write a replacement posting table next to the live one and
+        promote it crash-safely (:func:`_promote`)."""
+        live = self._postings_path()
+        new_postings.write.mode("overwrite").partitionBy("shard").parquet(
+            live + "_new"
+        )
+        _promote(self.fs, live)
         self._invalidate_reads()
+
+    def _swap_postings(self, new_postings: DataFrame, manifest_updates: dict) -> None:
+        """Replace the posting table (:meth:`_replace_postings`) and
+        persist the manifest changes plus the new table's stats."""
+        self._replace_postings(new_postings)
         m = dict(self.manifest)
         m.update(manifest_updates)
-        m["n_postings"] = int(self.spark.read.parquet(old).count())
-        self.fs.write_text(os.path.join(self.path, "manifest.json"), json.dumps(m))
-        self._manifest = m
+        m.update(_postings_stats(self._postings()))
+        self._write_manifest(m)
 
     def reshard(self, num_shards: int) -> "InvertedIndex":
         """Re-bucket the posting table into a new shard count (reference
@@ -885,8 +1068,7 @@ class InvertedIndex:
         terms = [r["term"] for r in hot_terms.collect()]
         m = dict(self.manifest)
         m["hot_terms"] = sorted(terms)
-        self.fs.write_text(os.path.join(self.path, "manifest.json"), json.dumps(m))
-        self._manifest = m
+        self._write_manifest(m)
         return self
 
     def _range(self, lo, hi) -> DataFrame:

@@ -920,7 +920,8 @@ def load_ivf_centroids(spark, path: str) -> np.ndarray:
     import os
 
     rows = (
-        spark.read.parquet(os.path.join(path, "centroids"))
+        spark.read.schema("cell int, centroid array<double>")
+        .parquet(os.path.join(path, "centroids"))
         .orderBy("cell")
         .collect()
     )
@@ -937,9 +938,26 @@ def append_ivf_assignments(
     """Incremental maintenance: assign only the delta rows to the
     existing centroids and append to the ``assign`` table — the
     reference's ``update_index`` regime (``vector_search_ops.py:51-82``),
-    O(delta), no rebuild.
+    O(delta), no rebuild.  The caller passes exactly the rows the table
+    lacks (``Dataset.update_vector_index`` passes the appended id
+    range), so nothing is joined against the existing table; the delta
+    lands as at most one file per touched cell."""
+    _write_ivf_assignments(df_delta, vec_col, id_col, path, quantize_bits)
 
-    The delta MUST land in the same layout the table already has
+
+def _write_ivf_assignments(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    path: str,
+    quantize_bits: "int | None" = None,
+    replace: bool = False,
+) -> None:
+    """Assign ``df``'s rows to the persisted centroids and append them
+    to the ``assign`` table, or with ``replace`` rewrite the table from
+    them (re-assignment after in-place vector edits, no retrain).
+
+    The rows MUST land in the same layout the table already has
     (plain, inverted-list float32 ``vec``, or SQ8 ``qvec``+``scale``) —
     appending (id, cell)-only rows into a vector-carrying table leaves
     NULL list entries that crash every subsequent search's
@@ -948,7 +966,7 @@ def append_ivf_assignments(
     when the table is quantized)."""
     import os
 
-    spark = df_delta.sparkSession
+    spark = df.sparkSession
     centroids = load_ivf_centroids(spark, path)
     existing = spark.read.parquet(os.path.join(path, "assign"))
     has_vec = "vec" in existing.columns
@@ -987,9 +1005,11 @@ def append_ivf_assignments(
     else:
         schema = "id long, cell int"
     (
-        ensure_parallelism(df_delta.select(id_col, vec_col))
+        ensure_parallelism(df.select(id_col, vec_col))
         .mapInPandas(assign, schema)
-        .write.mode("append")
+        # one file per touched cell, not one per (writer task, cell)
+        .repartition("cell")
+        .write.mode("overwrite" if replace else "append")
         .partitionBy("cell")
         .parquet(os.path.join(path, "assign"))
     )
@@ -1493,9 +1513,18 @@ def append_ivfpq_codes(
     """Incremental IVFPQ maintenance: encode only the delta rows with the
     EXISTING centroids and codebooks (residual-encoded when the
     artifact's meta says so), append to ``codes`` — O(delta)."""
+    _write_ivfpq_codes(df_delta, vec_col, id_col, path)
+
+
+def _write_ivfpq_codes(
+    df: DataFrame, vec_col: str, id_col: str, path: str, replace: bool = False
+) -> None:
+    """Encode ``df``'s rows with the persisted centroids and codebooks
+    and append them to ``codes``, or with ``replace`` rewrite ``codes``
+    from them (re-encoding after in-place vector edits, no retrain)."""
     import os
 
-    spark = df_delta.sparkSession
+    spark = df.sparkSession
     centroids = load_ivf_centroids(spark, path)
     books = load_pq_codebooks(spark, path)
     residual = _read_residual_flag(spark, path)
@@ -1530,10 +1559,10 @@ def append_ivfpq_codes(
         ", vec array<float>" if stored else ""
     )
     (
-        ensure_parallelism(df_delta.select(id_col, vec_col))
+        ensure_parallelism(df.select(id_col, vec_col))
         .mapInPandas(encode, schema)
         .repartition("cell")
-        .write.mode("append")
+        .write.mode("overwrite" if replace else "append")
         .partitionBy("cell")
         .parquet(os.path.join(path, "codes"))
     )

@@ -18,6 +18,21 @@ matter how large the table is — the same property the reference gets
 from per-commit chunk maps (``commit_chunk_map.py``).  Updates/pops are
 copy-on-write rewrites of the affected snapshot.
 
+Change record (the analogue of the reference's ``commit_diff.py``):
+every commit and merge stores in ``Snapshot.extra`` what it changed
+relative to its FIRST parent —
+
+- ``ids_stable``: no parent row was renumbered or dropped, so the
+  parent's rows keep their ``_row_id`` and anything new sits at
+  ``_row_id >= parent.row_count``;
+- ``edited``: the tensors whose existing cells changed (including
+  tensors created, deleted or renamed).
+
+Index refresh walks this record along the first-parent chain
+(``Dataset.update_index`` / ``update_vector_index``) to pay only for
+the delta.  A snapshot without the record (written before it existed,
+or the root) is treated as "anything may have changed".
+
 The reference's whole commit-tree machinery
 (``muller/core/version_control/commit_node.py``, ``commits.py:63-180``)
 reduces to these JSON manifests; branches are just named refs into one
@@ -150,6 +165,7 @@ class CommitLog:
         row_count: int,
         next_uuid: int,
         commit_id: str | None = None,
+        extra: dict[str, Any] | None = None,
     ) -> Snapshot:
         snap = Snapshot(
             commit_id=commit_id or self.new_commit_id(),
@@ -162,6 +178,7 @@ class CommitLog:
             tensor_meta=tensor_meta,
             row_count=row_count,
             next_uuid=next_uuid,
+            extra=dict(extra or {}),
         )
         self._write_snapshot(snap)
         self.set_ref(branch, snap.commit_id)

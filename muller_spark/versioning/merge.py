@@ -26,12 +26,20 @@ Resolution matrix ported from the reference
 Executed as a single full-outer 3-way join on ``_uuid`` with per-column
 CASE expressions — one shuffle per side, no driver-side row state, which
 is what makes this merge work at 100 TB where the reference's in-RAM
-index maps cannot.
+index maps cannot.  The join is evaluated once: it is cached, one
+aggregation (the census) counts every row class, and the write of the
+merged table reads the same cached join.  The census decides the
+conflicts, the merged row count, the merge's change record (did every
+row of ``ours`` keep its ``_row_id``, and which tensors' existing cells
+changed — see ``versioning/log.py``) and the numbering: when every
+``ours`` row survives and the kept theirs-only rows are exactly the tail
+of theirs' ids, merged ids are plain arithmetic; otherwise rows are
+renumbered densely with ``rowid.dense_row_numbers``.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -117,6 +125,17 @@ def _changed_row(j: DataFrame, prefix: str, tensors: Sequence[str]) -> Column:
     return out
 
 
+class MergeOutcome(NamedTuple):
+    """What :func:`three_way_merge` wrote: the merged schema and
+    tensor meta, the row count (from the census, not a re-count), and
+    the change record relative to ``ours`` (see ``versioning/log.py``)."""
+
+    meta: dict
+    row_count: int
+    schema_json: str
+    change: dict
+
+
 def three_way_merge(
     ds,
     ours_df: DataFrame,
@@ -130,8 +149,12 @@ def three_way_merge(
     pop_resolution: str | None,
     delete_removed_tensors: bool,
     force: bool,
-    next_uuid: int,
-):
+    out_dir: str,
+) -> MergeOutcome:
+    """Merge, write the merged table to ``out_dir``, and return what
+    was written.  The 3-way join is cached once and stays pinned until
+    the write has finished, so the census and the write share one
+    evaluation of it; it is released on every exit."""
     merged_meta = merge_schemas(
         ours_meta, theirs_meta, base_meta, delete_removed_tensors, force
     )
@@ -146,26 +169,47 @@ def three_way_merge(
     common = [t for t in tensors if t in ours_meta and t in theirs_meta]
     j = _joined(ours_df, theirs_df, base_df, tensors).cache()
     try:
-        return _three_way_body(
-            j, tensors, common, merged_meta, next_uuid,
+        result, row_count, change = _three_way_body(
+            j, tensors, common, ours_meta,
             append_resolution, update_resolution, pop_resolution,
         )
+        result.write.mode("overwrite").parquet(out_dir)
+        return MergeOutcome(merged_meta, row_count, result.schema.json(), change)
     finally:
-        # unpersist on EVERY exit — a MergeConflictError raise would
-        # otherwise leak the cached 3-way join for the session; the
-        # returned result is lazy either way (the cache only ever
-        # served the census collect)
+        # unpersist on EVERY exit (a MergeConflictError raise too), but
+        # only after the write: the lazy result reads the cached join
         j.unpersist()
 
 
+def _merged_value(j: DataFrame, t: str, update_resolution: str | None) -> Column:
+    """Cell value of tensor ``t`` for a row present in all three
+    snapshots: a one-sided change wins, a divergent one follows
+    ``update_resolution``."""
+    o_c, t_c, b_c = _gcol(j, f"o_{t}"), _gcol(j, f"t_{t}"), _gcol(j, f"b_{t}")
+    return (
+        F.when(
+            _neq(o_c, b_c) & _neq(t_c, b_c) & _neq(o_c, t_c),
+            t_c if update_resolution == "theirs" else o_c,
+        )
+        .when(_neq(t_c, b_c) & o_c.eqNullSafe(b_c), t_c)
+        .otherwise(o_c)
+    )
+
+
 def _three_way_body(
-    j, tensors, common, merged_meta, next_uuid,
+    j, tensors, common, ours_meta,
     append_resolution, update_resolution, pop_resolution,
 ):
     in_o, in_t, in_b = F.col("o_in"), F.col("t_in"), F.col("b_in")
+    o_rid, t_rid = F.col(f"o_{ROW_ID_COL}"), F.col(f"t_{ROW_ID_COL}")
     t_updated = _changed_row(j, "t_", common)
+    merged = {t: _merged_value(j, t, update_resolution) for t in tensors}
 
-    # -- conflict census (one aggregation pass) -------------------------
+    # -- census: one aggregation pass ------------------------------------
+    # Row classes are named by presence in (ours, theirs, base): c110 is
+    # "in ours and theirs, not in base".  Every decision below, the row
+    # count, the change record and the numbering choice derive from
+    # these counts on the driver.
     divergent_any = F.lit(False)
     for t in common:
         # both-created tensors have no b_ column: NULL base, so the
@@ -174,96 +218,138 @@ def _three_way_body(
         divergent_any = divergent_any | (
             _neq(o_c, b_c) & _neq(t_c, b_c) & _neq(o_c, t_c)
         )
-    census = j.agg(
-        F.sum((in_o & ~in_b).cast("long")).alias("app_o"),
-        F.sum((in_t & ~in_b).cast("long")).alias("app_t"),
-        F.sum((in_b & in_o & ~in_t).cast("long")).alias("pop_t_only"),
-        F.sum((in_b & ~in_o & in_t).cast("long")).alias("pop_o_only"),
-        F.sum((in_b & in_o & in_t & divergent_any).cast("long")).alias("upd_conflicts"),
-    ).collect()[0]
 
-    both_appended = (census["app_o"] or 0) > 0 and (census["app_t"] or 0) > 0
+    def n(pred: Column) -> Column:
+        return F.sum(pred.cast("long"))
+
+    ours_tensors = [t for t in tensors if t in ours_meta]
+    aggs = [
+        n(in_o & in_t & in_b).alias("c111"),
+        n(in_o & ~in_t & in_b).alias("c101"),
+        n(~in_o & in_t & in_b).alias("c011"),
+        n(~in_o & in_t & in_b & t_updated).alias("c011_updated"),
+        n(~in_o & ~in_t & in_b).alias("c001"),
+        n(in_o & in_t & ~in_b).alias("c110"),
+        n(in_o & ~in_t & ~in_b).alias("c100"),
+        n(~in_o & in_t & ~in_b).alias("c010"),
+        n(in_b & in_o & in_t & divergent_any).alias("upd_conflicts"),
+        F.max(o_rid).alias("o_max"),
+        F.min(F.when(~in_o & in_t & ~in_b, t_rid)).alias("c010_min"),
+    ]
+    # per ours tensor: do kept ours rows end with a value other than
+    # ours'?  (c111 rows take the 3-way value; c110 rows, appended on
+    # both sides, take theirs' value when theirs' appends are kept)
+    for i, t in enumerate(ours_tensors):
+        o_c = _gcol(j, f"o_{t}")
+        aggs.append(n(in_o & in_t & in_b & _neq(merged[t], o_c)).alias(f"e111_{i}"))
+        aggs.append(n(in_o & in_t & ~in_b & _neq(_gcol(j, f"t_{t}"), o_c)).alias(f"e110_{i}"))
+    census = {k: (v or 0) for k, v in j.agg(*aggs).collect()[0].asDict().items()}
+    c = census.__getitem__
+
+    app_o, app_t = c("c110") + c("c100"), c("c110") + c("c010")
+    both_appended = app_o > 0 and app_t > 0
     if both_appended and append_resolution is None:
         raise MergeConflictError(
             "both branches appended different samples; pass "
             "append_resolution='ours'|'theirs'|'both'"
         )
-    exclusive_pops = (census["pop_t_only"] or 0) + (census["pop_o_only"] or 0)
-    if exclusive_pops > 0 and pop_resolution is None:
+    if c("c101") + c("c011") > 0 and pop_resolution is None:
         raise MergeConflictError(
             "branches deleted different samples; pass "
             "pop_resolution='ours'|'theirs'|'both'"
         )
-    if (census["upd_conflicts"] or 0) > 0 and update_resolution is None:
+    if c("upd_conflicts") > 0 and update_resolution is None:
         raise MergeConflictError(
             "both branches updated the same samples differently; pass "
             "update_resolution='ours'|'theirs'"
         )
 
     # -- row decisions ---------------------------------------------------
+    keep_their_popped = pop_resolution == "ours"           # c101
+    drop_our_appends = both_appended and append_resolution == "theirs"
+    keep_their_appends = not both_appended or append_resolution in ("theirs", "both")
+
     keep_merge = in_b & in_o & in_t
     # theirs popped, we kept
-    keep_ours_despite_their_pop = (
-        in_b & in_o & ~in_t & F.lit(pop_resolution == "ours")
-    )
+    keep_ours_despite_their_pop = in_b & in_o & ~in_t & F.lit(keep_their_popped)
     # we popped, theirs kept → resurrect?
     resurrect = in_b & ~in_o & in_t & (
         (F.lit(update_resolution == "theirs") & t_updated)
         | F.lit(pop_resolution == "theirs")
     )
-    keep_our_append = (in_o & ~in_b) & ~F.lit(
-        both_appended and append_resolution == "theirs"
-    )
-    keep_their_append = (in_t & ~in_b) & (
-        ~F.lit(both_appended) | F.lit(append_resolution in ("theirs", "both"))
-    )
+    keep_our_append = (in_o & ~in_b) & ~F.lit(drop_our_appends)
+    keep_their_append = (in_t & ~in_b) & F.lit(keep_their_appends)
 
-    from_theirs = resurrect | (in_t & ~in_b & keep_their_append)
+    from_theirs = resurrect | keep_their_append
     keep = keep_merge | keep_ours_despite_their_pop | resurrect | keep_our_append | keep_their_append
-
     rows = j.filter(keep)
 
+    # the same decisions, counted
+    n_resurrected = (
+        c("c011") if pop_resolution == "theirs"
+        else c("c011_updated") if update_resolution == "theirs" else 0
+    )
+    n_ours = c("c111") + c("c101") + c("c110") + c("c100")
+    n_ours_kept = (
+        c("c111") + c("c110")  # a c110 row is kept as ours or as theirs
+        + (c("c101") if keep_their_popped else 0)
+        + (0 if drop_our_appends else c("c100"))
+    )
+    n_theirs_only = n_resurrected + (c("c010") if keep_their_appends else 0)
+    row_count = n_ours_kept + n_theirs_only
+
+    # ours ids are dense by construction; the o_max check makes the
+    # "ours rows keep their ids" claim independent of that invariant
+    ids_stable = n_ours_kept == n_ours and c("o_max") == max(n_ours - 1, 0)
+    edited = {t for t in tensors if t not in ours_meta} | {
+        t for t in ours_meta if t not in tensors
+    }
+    for i, t in enumerate(ours_tensors):
+        if c(f"e111_{i}") or (keep_their_appends and c(f"e110_{i}")):
+            edited.add(t)
+    change = {"ids_stable": ids_stable, "edited": sorted(edited)}
+
     # -- column materialization -----------------------------------------
-    out_cols = [F.col(UUID_COL)]
-    sort_key = F.when(
-        F.col("o_in"), F.struct(F.lit(0).alias("pri"), F.col(f"o_{ROW_ID_COL}").alias("pos"))
-    ).otherwise(F.struct(F.lit(1).alias("pri"), F.col(f"t_{ROW_ID_COL}").alias("pos")))
-    for t in tensors:
-        o_c = F.col(f"o_{t}") if f"o_{t}" in j.columns else F.lit(None)
-        t_c = F.col(f"t_{t}") if f"t_{t}" in j.columns else F.lit(None)
-        b_c = F.col(f"b_{t}") if f"b_{t}" in j.columns else F.lit(None)
-        three_way = (
-            F.when(
-                _neq(o_c, b_c) & _neq(t_c, b_c) & _neq(o_c, t_c),
-                t_c if update_resolution == "theirs" else o_c,
-            )
-            .when(_neq(t_c, b_c) & o_c.eqNullSafe(b_c), t_c)
-            .otherwise(o_c)
-        )
-        value = (
-            F.when(keep_merge, three_way)
-            .when(from_theirs, t_c)
-            .otherwise(o_c)
-        )
-        out_cols.append(value.alias(t))
-    # merged positions: ours-first (pri 0) by our old position, then
-    # theirs-only rows by their position.  Distributed renumbering via
-    # value-range buckets + offsets (rowid.dense_row_numbers) — a plain
-    # Window.orderBy(pri, pos) would be an Exchange SinglePartition
-    # funneling the merged table through one task.
+    out_cols = [
+        F.when(keep_merge, merged[t])
+        .when(from_theirs, _gcol(j, f"t_{t}"))
+        .otherwise(_gcol(j, f"o_{t}"))
+        .alias(t)
+        for t in tensors
+    ]
+    # merged positions: ours-first by our old position, then theirs-only
+    # rows by their position.  When every ours row is kept (ours ids are
+    # dense, so they stay put) and the kept theirs-only rows are exactly
+    # theirs' id suffix [n_t - k, n_t), the numbering is arithmetic and
+    # needs no pass over the data.
+    n_theirs = c("c111") + c("c011") + c("c110") + c("c010")
+    suffix_start = n_theirs - c("c010")
+    if (
+        ids_stable
+        and n_resurrected == 0
+        and (not keep_their_appends or c("c010") == 0 or c("c010_min") == suffix_start)
+    ):
+        rid = F.when(in_o, o_rid).otherwise(t_rid + F.lit(n_ours - suffix_start))
+        result = rows.select(F.col(UUID_COL), rid.alias(ROW_ID_COL), *out_cols)
+        return result, row_count, change
+
+    # otherwise renumber densely by (pri, pos): value-range buckets +
+    # offsets (rowid.dense_row_numbers) — a plain Window.orderBy(pri,
+    # pos) would be an Exchange SinglePartition funneling the merged
+    # table through one task.
     from muller_spark.rowid import dense_row_numbers
 
-    result = (
-        rows.select(*out_cols, sort_key.alias("_sort"))
-        .withColumn("_pri", F.col("_sort.pri").cast("long"))
-        .withColumn("_pos", F.col("_sort.pos").cast("long"))
+    result = rows.select(
+        F.col(UUID_COL), *out_cols,
+        F.when(in_o, F.lit(0)).otherwise(F.lit(1)).cast("long").alias("_pri"),
+        F.when(in_o, o_rid).otherwise(t_rid).cast("long").alias("_pos"),
     )
     result = (
         dense_row_numbers(result, ["_pri", "_pos"], ROW_ID_COL)
-        .drop("_sort", "_pri", "_pos")
+        .drop("_pri", "_pos")
         .select(UUID_COL, ROW_ID_COL, *tensors)
     )
-    return result, merged_meta, next_uuid
+    return result, row_count, change
 
 
 def detect_conflicts(
