@@ -752,8 +752,7 @@ class Dataset:
         )
 
     def _refresh_route(
-        self, operator: str, tensor: str, indexed_commit: "str | None",
-        can_reassign: bool,
+        self, operator: str, tensor: str, indexed_commit: "str | None"
     ) -> "tuple[str, Snapshot | None]":
         """Decide how an index built at ``indexed_commit`` catches up
         with HEAD, from the change records (``Snapshot.extra``, see
@@ -763,12 +762,9 @@ class Dataset:
         - ``delta``: every step kept row ids stable and none edited
           ``tensor`` — the index lacks exactly the rows with
           ``_row_id >= indexed.row_count``;
-        - ``reassign`` (vector indexes, ``can_reassign``): ids stable
-          but ``tensor`` cells were edited — re-assign every row to
-          the existing centroids, no retrain;
-        - ``rebuild``: anything else — a step renumbered or dropped
-          rows, a step has no change record, or the indexed commit is
-          not on the chain.
+        - ``rebuild``: anything else — a step edited ``tensor`` cells,
+          renumbered or dropped rows, or has no change record, or the
+          indexed commit is not on the chain.
 
         Returns ``(route, indexed snapshot or None)`` and logs one
         structured record on the ``muller_spark`` logger."""
@@ -796,9 +792,6 @@ class Dataset:
                     if not edited:
                         route, base = "delta", cur
                         reason = f"rows >= {cur.row_count} appended"
-                    elif can_reassign:
-                        route, base = "reassign", cur
-                        reason = f"{tensor!r} cells edited, row ids stable"
                     else:
                         reason = f"{tensor!r} cells edited"
             except KeyError:
@@ -832,7 +825,7 @@ class Dataset:
             raise ValueError(f"no index on {tensor!r}; create_index_vectorized first")
         idx = InvertedIndex(self.spark, path)
         route, base = self._refresh_route(
-            "update_index", tensor, idx.manifest.get("commit_id"), can_reassign=False
+            "update_index", tensor, idx.manifest.get("commit_id")
         )
         if route == "noop":
             return idx
@@ -1132,12 +1125,9 @@ class Dataset:
         - ``delta`` — the rows appended since (``_row_id >=
           indexed.row_count``) are assigned to the EXISTING centroids
           (and codebooks) and appended: O(delta), no retrain;
-        - ``reassign`` — ids stable but ``tensor_name`` cells edited:
-          every row is re-assigned to the existing centroids and the
-          assignment table (IVFPQ codes, disk-graph vectors and cell
-          graphs) is rewritten, no retrain;
-        - ``rebuild`` — rows were renumbered or dropped, or the history
-          is unknown: the index is built again from its manifest.
+        - ``rebuild`` — ``tensor_name`` cells were edited, rows were
+          renumbered or dropped, or the history is unknown: the index is
+          built again from its manifest.
 
         No-op when the index already matches HEAD; an index type with
         no persisted artifact only has its manifest re-stamped."""
@@ -1147,7 +1137,7 @@ class Dataset:
         if m is None:
             raise VectorIndexNotFoundError(f"{tensor_name}/{index_name}")
         route, base = self._refresh_route(
-            "update_vector_index", tensor_name, m.get("commit_id"), can_reassign=True
+            "update_vector_index", tensor_name, m.get("commit_id")
         )
         if route == "noop":
             return
@@ -1161,30 +1151,28 @@ class Dataset:
             if loaded:
                 self.load_vector_index(tensor_name, index_name)
             return
-        rows = self.df.select(ROW_ID_COL, tensor_name)
-        if route == "delta":
-            rows = rows.filter(F.col(ROW_ID_COL) >= base.row_count)
-        replace = route == "reassign"
+        delta = self.df.select(ROW_ID_COL, tensor_name).filter(
+            F.col(ROW_ID_COL) >= base.row_count
+        )
         if os.path.isdir(os.path.join(idx_dir, "codes")):
-            from muller_spark.index.vector import _write_ivfpq_codes
+            from muller_spark.index.vector import append_ivfpq_codes
 
-            _write_ivfpq_codes(rows, tensor_name, ROW_ID_COL, idx_dir, replace=replace)
+            append_ivfpq_codes(delta, tensor_name, ROW_ID_COL, idx_dir)
         elif os.path.isdir(os.path.join(idx_dir, "adjacency")):
-            from muller_spark.index.graph import append_graph_vectors, reassign_graph_vectors
+            # disk graph: rebuild only the delta's touched cells
+            from muller_spark.index.graph import append_graph_vectors
 
-            refresh = reassign_graph_vectors if replace else append_graph_vectors
-            refresh(rows, tensor_name, ROW_ID_COL, idx_dir, R=int(hyper.get("R", 12)))
+            append_graph_vectors(
+                delta, tensor_name, ROW_ID_COL, idx_dir, R=int(hyper.get("R", 12))
+            )
         elif os.path.isdir(os.path.join(idx_dir, "assign")):
-            from muller_spark.index.vector import _write_ivf_assignments, append_ivf_assignments
+            from muller_spark.index.vector import append_ivf_assignments
 
             qb = hyper.get("quantize_bits")
-            qb = int(qb) if qb is not None else None
-            if replace:
-                _write_ivf_assignments(
-                    rows, tensor_name, ROW_ID_COL, idx_dir, quantize_bits=qb, replace=True
-                )
-            else:
-                append_ivf_assignments(rows, tensor_name, ROW_ID_COL, idx_dir, quantize_bits=qb)
+            append_ivf_assignments(
+                delta, tensor_name, ROW_ID_COL, idx_dir,
+                quantize_bits=int(qb) if qb is not None else None,
+            )
         m["commit_id"] = self._snapshot.commit_id
         self.fs.write_text(os.path.join(idx_dir, "manifest.json"), json.dumps(m))
         state = self._vector_loaded.get((tensor_name, index_name))

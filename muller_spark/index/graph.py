@@ -268,23 +268,6 @@ def _write_cells(spark, path, cell_vectors, bc, R, prior_medoids):
         graph.unpersist()
 
 
-def _stored_qmax(spark, path: str) -> "float | None":
-    """The SQ grid of the stored ``vectors`` table: rows added later
-    must match the existing at-rest layout AND grid, so read
-    ``quantize_bits`` from the build-time meta table, not a caller flag
-    that could silently diverge; pre-meta artifacts (or a missing meta)
-    fall back to column sniffing at the 8-bit default."""
-    try:
-        meta = spark.read.parquet(os.path.join(path, "meta")).first()
-        bits = meta["quantize_bits"] if meta is not None else None
-        return float(2 ** (int(bits) - 1) - 1) if bits is not None else None
-    except Exception:
-        existing_cols = spark.read.parquet(
-            os.path.join(path, "vectors")
-        ).columns
-        return 127.0 if "qvec" in existing_cols else None
-
-
 def append_graph_vectors(
     df_delta: DataFrame, vec_col: str, id_col: str, path: str, R: int = 12
 ) -> None:
@@ -301,7 +284,22 @@ def append_graph_vectors(
     # its loader rather than a second copy of the read
     centroids = load_ivf_centroids(spark, path)
     bc = spark.sparkContext.broadcast(centroids)
-    qmax = _stored_qmax(spark, path)
+
+    # appended rows must match the existing at-rest layout AND grid —
+    # read quantize_bits from the build-time meta table, not a caller
+    # flag that could silently diverge; pre-meta artifacts (or a
+    # missing meta) fall back to column sniffing at the 8-bit default
+    qmax = None
+    try:
+        meta = spark.read.parquet(os.path.join(path, "meta")).first()
+        bits = meta["quantize_bits"] if meta is not None else None
+        if bits is not None:
+            qmax = float(2 ** (int(bits) - 1) - 1)
+    except Exception:
+        existing_cols = spark.read.parquet(
+            os.path.join(path, "vectors")
+        ).columns
+        qmax = 127.0 if "qvec" in existing_cols else None
     delta = df_delta.select(id_col, vec_col).mapInPandas(
         _assigner(bc, vec_col, id_col, qmax=qmax), _vector_schema(qmax)
     )
@@ -321,34 +319,6 @@ def append_graph_vectors(
         if r["cell"] not in set(affected)
     ]
     _write_cells(spark, path, cell_vectors, bc, R, prior_medoids=prior)
-
-
-def reassign_graph_vectors(
-    df: DataFrame, vec_col: str, id_col: str, path: str, R: int = 12
-) -> None:
-    """Re-assign EVERY row of ``df`` to the persisted centroids (no
-    retrain), rewrite ``vectors`` and rebuild every cell's graph, the
-    medoids and the backbone — the refresh after in-place edits of the
-    vector column, where a stored vector and its cell no longer match
-    the table."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(load_ivf_centroids(spark, path))
-    qmax = _stored_qmax(spark, path)
-    assigned = ensure_parallelism(df.select(id_col, vec_col)).mapInPandas(
-        _assigner(bc, vec_col, id_col, qmax=qmax), _vector_schema(qmax)
-    )
-    assigned.repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(os.path.join(path, "vectors"))
-    # every cell is rebuilt: drop adjacency partitions of cells that
-    # the re-assignment emptied
-    from muller_spark.fs import get_fs
-
-    adjacency, fs = os.path.join(path, "adjacency"), get_fs(path)
-    if fs.isdir(adjacency):
-        fs.rmtree(adjacency)
-    vectors = spark.read.parquet(os.path.join(path, "vectors"))
-    _write_cells(spark, path, vectors, bc, R, prior_medoids=[])
 
 
 def graph_search(

@@ -28,14 +28,17 @@ Spark-first re-expression of the reference's hybrid full-text engine
   against a moved HEAD fall back to scan (reference
   ``filter_vectorized.py:476-492``).
 - **update**: the delta's posting rows are tokenized by the same helper
-  as ``build`` and ADDED as new files (``delta-<commit>-*``, one per
-  touched shard) to the shard directories; nothing indexed is rewritten.
-  The manifest lists the appended segments, so files of an update that
-  crashed before its manifest write are removed by the next update.
-  ``optimize()`` compacts the appended files.
+  as ``build`` and ADDED as new files (``delta-<segment>-*``, one per
+  touched shard, under a fresh segment id) to the shard directories;
+  nothing indexed is rewritten.  The manifest lists the appended
+  segments, so files of an update that crashed before its manifest
+  write are removed by the next update.  ``optimize()`` compacts the
+  appended posting files.
 - **swaps** (``optimize``, ``reshard``, docstats and typo-key rewrites)
   write the new table beside the live one and promote it by
-  rename-rename-rmtree; an interrupted promote heals on the next open.
+  rename-rename-rmtree (``ledger._swap_log_dir``); an interrupted
+  promote is healed by the next mutation or by :meth:`InvertedIndex.recover`
+  — never by a read, which would race a running writer's renames.
 
 Scalar (non-text) tensors are indexed by value string, mirroring the
 reference's hashed-scalar postings (``:169-180``).
@@ -54,6 +57,7 @@ from pyspark.sql import functions as F
 
 from muller_spark.errors import MullerSparkError
 from muller_spark.fs import get_fs
+from muller_spark.operators.ledger import _recover_log_swap, _swap_log_dir
 from muller_spark.plans.conditions import TOKEN_SPLIT_REGEX
 from muller_spark.schema import ROW_ID_COL
 
@@ -219,8 +223,8 @@ def _postings_stats(postings: DataFrame) -> dict:
     """Manifest fields of a freshly written posting table, from one
     aggregate: ``n_postings`` (so the aggregate fast path's totality
     check never re-scans the table), ``max_id`` (so ``update`` can tell
-    a delta of new ids from an overlapping one), no appended segments
-    yet, and a fresh ``postings_id`` (so memoized reads re-open)."""
+    a delta of new ids from an overlapping one) and a fresh
+    ``postings_id`` (so memoized reads re-open)."""
     r = postings.agg(
         F.count(F.lit(1)).alias("n"), F.max("id").alias("hi")
     ).first()
@@ -228,40 +232,8 @@ def _postings_stats(postings: DataFrame) -> dict:
     return {
         "n_postings": int(r["n"]),
         "max_id": hi,
-        "segments": [],
         "postings_id": uuid.uuid4().hex,
     }
-
-
-def _promote(fs, live: str) -> None:
-    """Replace ``live`` with the fully written ``live + '_new'`` by
-    rename-rename-rmtree: the live table is never deleted before its
-    replacement is complete, and the one window with no live directory
-    (between the two renames) is closed by :func:`_recover_promote` on
-    the next open — the same discipline as ``ledger._swap_log_dir``,
-    through the index's filesystem seam."""
-    new, old = live + "_new", live + "_old"
-    if fs.isdir(old):
-        fs.rmtree(old)  # stale from an earlier crash
-    if fs.isdir(live):
-        fs.rename(live, old)
-    fs.rename(new, live)
-    if fs.isdir(old):
-        fs.rmtree(old)
-
-
-def _recover_promote(fs, live: str) -> None:
-    """Finish a :func:`_promote` interrupted by a crash: with no live
-    directory, promote a complete ``_new`` (its ``_SUCCESS`` marker
-    present) or else restore ``_old``; drop ``_old`` once live is back."""
-    new, old = live + "_new", live + "_old"
-    if not fs.isdir(live):
-        if fs.exists(os.path.join(new, "_SUCCESS")):
-            fs.rename(new, live)
-        elif fs.isdir(old):
-            fs.rename(old, live)
-    if fs.isdir(old) and fs.isdir(live):
-        fs.rmtree(old)
 
 
 class InvertedIndex:
@@ -323,7 +295,6 @@ class InvertedIndex:
         is_text: bool = True,
         positions: bool = False,
         typo_keys: "int | None" = None,
-        _write_stats: bool = True,
     ) -> "InvertedIndex":
         spark = df.sparkSession
         postings, has_cjk = _postings_frame(
@@ -346,12 +317,14 @@ class InvertedIndex:
             "is_text": is_text,
             "tokenizer": ("cjk_fmm" if has_cjk else "regex") if is_text else "scalar",
             "positions": bool(positions),
+            # appended segments (``update``); docstats is rewritten below
+            "segments": [],
             **_postings_stats(spark.read.parquet(os.path.join(path, "postings"))),
         }
         fs.write_text(os.path.join(path, "manifest.json"), json.dumps(manifest))
         out = cls(spark, path)
         out._manifest = manifest
-        if positions and _write_stats:
+        if positions:
             out._write_docstats()
         if typo_keys:
             out.enable_typo_match(max_edits=int(typo_keys))
@@ -369,17 +342,25 @@ class InvertedIndex:
     def _postings(self) -> DataFrame:
         self._revalidate()
         if self._postings_df is None:
-            _recover_promote(self.fs, self._postings_path())
             self._postings_df = self.spark.read.parquet(self._postings_path())
         return self._postings_df
 
     def _typo_keys(self) -> DataFrame:
         self._revalidate()
         if self._typo_keys_df is None:
-            live = os.path.join(self.path, "typo_keys")
-            _recover_promote(self.fs, live)
-            self._typo_keys_df = self.spark.read.parquet(live)
+            self._typo_keys_df = self.spark.read.parquet(
+                os.path.join(self.path, "typo_keys")
+            )
         return self._typo_keys_df
+
+    def recover(self) -> "InvertedIndex":
+        """Finish a table swap (postings, docstats, typo keys) that a
+        crash interrupted between its two renames.  Every mutation
+        calls this first; reads never do, so a query running beside a
+        writer cannot rename a directory in the middle of its swap."""
+        for table in ("postings", "docstats", "typo_keys"):
+            _recover_log_swap(os.path.join(self.path, table), self.fs)
+        return self
 
     # -- search ----------------------------------------------------------
     def search(self, query, search_type: str = "fuzzy_match",
@@ -545,15 +526,14 @@ class InvertedIndex:
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("dl"))
             .write.mode("overwrite")
-            .parquet(final + "_new")
+            .parquet(final + ".compact")
         )
-        _promote(self.fs, final)
+        _swap_log_dir(final, self.fs)
 
     def _docstats(self) -> DataFrame:
         """(id, dl) frame for BM25 — the persisted table when present,
         else computed from the postings (indexes built before docstats
         existed)."""
-        _recover_promote(self.fs, self._docstats_path())
         if self.fs.isdir(self._docstats_path()):
             return self.spark.read.parquet(self._docstats_path())
         return self._postings().groupBy("id").agg(
@@ -679,6 +659,7 @@ class InvertedIndex:
             raise ValueError(
                 f"typo keys support max_edits in (1, 2); got {max_edits}"
             )
+        self.recover()
         m = dict(self.manifest)
         self._write_typo_keys(max_edits, max_token_len, m["num_shards"])
         m["typo_keys"] = {
@@ -709,9 +690,9 @@ class InvertedIndex:
             .sortWithinPartitions("k", "term")
             .write.mode("overwrite")
             .partitionBy("kshard")
-            .parquet(live + "_new")
+            .parquet(live + ".compact")
         )
-        _promote(self.fs, live)
+        _swap_log_dir(live, self.fs)
         self._invalidate_reads()
 
     def _typo(self, query: str, max_edits: "int | None" = None) -> DataFrame:
@@ -862,22 +843,21 @@ class InvertedIndex:
         to the existing tables; ``n_postings`` grows by the delta's
         count.  Nothing already indexed is read, shuffled or rewritten.
 
-        The files are named ``delta-<commit id>-*`` and the manifest
-        lists the appended segments, so a crash between the append and
-        the manifest write is repaired by the next ``update``: segment
-        files the manifest does not list are removed before anything is
-        appended, and a retry lands the delta exactly once.
+        The files are named ``delta-<segment>-*`` under a fresh segment
+        id, and the manifest lists the appended segments, so a crash
+        between the append and the manifest write is repaired by the
+        next ``update``: segment files the manifest does not list are
+        removed before anything is appended, and a retry lands the delta
+        exactly once.
 
         A delta whose ids overlap the indexed ones (its smallest id is
         not above the manifest's ``max_id``) falls back to the full
         row-level merge: union, ``distinct``, rewrite and swap — the
         same result as indexing the union."""
+        self.recover()
         m = dict(self.manifest)
-        segment = commit_id or uuid.uuid4().hex
-        postings_dir = self._postings_path()
-        _recover_promote(self.fs, postings_dir)
         self._drop_unlisted_segments(m.get("segments") or [])
-        stage = postings_dir + "_delta"
+        stage = self._postings_path() + "_delta"
         delta, _ = _postings_frame(
             df, m["tensor"], m["id_col"], m["num_shards"],
             m["case_sensitive"], m["stop_words"] or None, m["is_text"],
@@ -896,6 +876,7 @@ class InvertedIndex:
             self._merge_rewrite(m, staged, commit_id)
         else:
             if st["n"]:
+                segment = uuid.uuid4().hex
                 self._append_segment(staged, stage, segment, m)
                 m["n_postings"] = int(m["n_postings"]) + int(st["n"])
                 m["max_id"] = st["hi"] if hi is None else max(hi, st["hi"])
@@ -972,6 +953,7 @@ class InvertedIndex:
             m["num_shards"],
         )
         self._replace_postings(merged)
+        m["segments"] = []  # the rewrite folded every appended file
         if m.get("positions"):
             # refresh docstats BEFORE the fresh manifest lands: a crash
             # in between leaves old-manifest + new-stats (harmlessly
@@ -998,17 +980,20 @@ class InvertedIndex:
     # -- maintenance -----------------------------------------------------
     def _replace_postings(self, new_postings: DataFrame) -> None:
         """Write a replacement posting table next to the live one and
-        promote it crash-safely (:func:`_promote`)."""
+        promote it crash-safely (``ledger._swap_log_dir``)."""
         live = self._postings_path()
         new_postings.write.mode("overwrite").partitionBy("shard").parquet(
-            live + "_new"
+            live + ".compact"
         )
-        _promote(self.fs, live)
+        _swap_log_dir(live, self.fs)
         self._invalidate_reads()
 
     def _swap_postings(self, new_postings: DataFrame, manifest_updates: dict) -> None:
         """Replace the posting table (:meth:`_replace_postings`) and
-        persist the manifest changes plus the new table's stats."""
+        persist the manifest changes plus the new table's stats.  The
+        docstats table is left as it is (re-bucketing keeps every (term,
+        id, pos) row), so the manifest keeps listing the segments whose
+        docstats files are still appended there."""
         self._replace_postings(new_postings)
         m = dict(self.manifest)
         m.update(manifest_updates)
@@ -1020,6 +1005,7 @@ class InvertedIndex:
         ``reshard_index``, ``inverted_index_vectorized.py:526``) without
         re-tokenizing the corpus: one keyed shuffle of the posting rows,
         O(terms), independent of corpus size."""
+        self.recover()
         p = (
             self._postings().drop("shard")
             .withColumn("shard", F.pmod(F.xxhash64("term"), F.lit(num_shards)))
@@ -1035,6 +1021,7 @@ class InvertedIndex:
         incremental ``update`` calls and wide builds leave many small
         files per shard; lookups then open O(files) footers instead of
         O(1)."""
+        self.recover()
         m = self.manifest
         p = (
             self._postings()
@@ -1050,6 +1037,7 @@ class InvertedIndex:
         (reference ``add_hot_shard``, ``inverted_index_vectorized.py:537``).
         The hot term list itself lives in the manifest, so routing is a
         driver-side set lookup — zero extra jobs for cold terms."""
+        self.recover()
         p = self._postings()
         hot_terms = (
             p.groupBy("term")

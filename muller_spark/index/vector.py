@@ -941,23 +941,9 @@ def append_ivf_assignments(
     O(delta), no rebuild.  The caller passes exactly the rows the table
     lacks (``Dataset.update_vector_index`` passes the appended id
     range), so nothing is joined against the existing table; the delta
-    lands as at most one file per touched cell."""
-    _write_ivf_assignments(df_delta, vec_col, id_col, path, quantize_bits)
+    lands as at most one file per touched cell.
 
-
-def _write_ivf_assignments(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-    quantize_bits: "int | None" = None,
-    replace: bool = False,
-) -> None:
-    """Assign ``df``'s rows to the persisted centroids and append them
-    to the ``assign`` table, or with ``replace`` rewrite the table from
-    them (re-assignment after in-place vector edits, no retrain).
-
-    The rows MUST land in the same layout the table already has
+    The delta MUST land in the same layout the table already has
     (plain, inverted-list float32 ``vec``, or SQ8 ``qvec``+``scale``) —
     appending (id, cell)-only rows into a vector-carrying table leaves
     NULL list entries that crash every subsequent search's
@@ -966,7 +952,7 @@ def _write_ivf_assignments(
     when the table is quantized)."""
     import os
 
-    spark = df.sparkSession
+    spark = df_delta.sparkSession
     centroids = load_ivf_centroids(spark, path)
     existing = spark.read.parquet(os.path.join(path, "assign"))
     has_vec = "vec" in existing.columns
@@ -1005,11 +991,11 @@ def _write_ivf_assignments(
     else:
         schema = "id long, cell int"
     (
-        ensure_parallelism(df.select(id_col, vec_col))
+        ensure_parallelism(df_delta.select(id_col, vec_col))
         .mapInPandas(assign, schema)
         # one file per touched cell, not one per (writer task, cell)
         .repartition("cell")
-        .write.mode("overwrite" if replace else "append")
+        .write.mode("append")
         .partitionBy("cell")
         .parquet(os.path.join(path, "assign"))
     )
@@ -1513,18 +1499,9 @@ def append_ivfpq_codes(
     """Incremental IVFPQ maintenance: encode only the delta rows with the
     EXISTING centroids and codebooks (residual-encoded when the
     artifact's meta says so), append to ``codes`` — O(delta)."""
-    _write_ivfpq_codes(df_delta, vec_col, id_col, path)
-
-
-def _write_ivfpq_codes(
-    df: DataFrame, vec_col: str, id_col: str, path: str, replace: bool = False
-) -> None:
-    """Encode ``df``'s rows with the persisted centroids and codebooks
-    and append them to ``codes``, or with ``replace`` rewrite ``codes``
-    from them (re-encoding after in-place vector edits, no retrain)."""
     import os
 
-    spark = df.sparkSession
+    spark = df_delta.sparkSession
     centroids = load_ivf_centroids(spark, path)
     books = load_pq_codebooks(spark, path)
     residual = _read_residual_flag(spark, path)
@@ -1559,10 +1536,10 @@ def _write_ivfpq_codes(
         ", vec array<float>" if stored else ""
     )
     (
-        ensure_parallelism(df.select(id_col, vec_col))
+        ensure_parallelism(df_delta.select(id_col, vec_col))
         .mapInPandas(encode, schema)
         .repartition("cell")
-        .write.mode("overwrite" if replace else "append")
+        .write.mode("append")
         .partitionBy("cell")
         .parquet(os.path.join(path, "codes"))
     )

@@ -43,39 +43,50 @@ import contextlib
 import glob
 import json
 import os
-import shutil
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
+from muller_spark.fs import LocalFS
 
-def _recover_log_swap(live_dir: str) -> None:
-    """Finish a compaction swap interrupted by a crash: if the live log
-    directory is missing but a fully-written ``.compact`` sibling
-    exists (its parquet ``_SUCCESS`` present), promote it; drop a
-    leftover ``.old`` once the live directory is back."""
+_LOCAL = LocalFS()
+
+
+def _recover_log_swap(live_dir: str, fs=_LOCAL) -> None:
+    """Finish a :func:`_swap_log_dir` interrupted by a crash: if the
+    live directory is missing, promote a fully-written ``.compact``
+    sibling (its parquet ``_SUCCESS`` present) or else restore ``.old``;
+    drop a leftover ``.old`` once the live directory is back.  It
+    renames, so a caller running beside a live swap races that swap's
+    own renames."""
     tmp = live_dir + ".compact"
     old = live_dir + ".old"
-    if not os.path.isdir(live_dir) and os.path.exists(
-        os.path.join(tmp, "_SUCCESS")
-    ):
-        os.rename(tmp, live_dir)
-    if os.path.isdir(live_dir) and os.path.isdir(old):
-        shutil.rmtree(old)
+    if not fs.isdir(live_dir):
+        if fs.exists(os.path.join(tmp, "_SUCCESS")):
+            fs.rename(tmp, live_dir)
+        elif fs.isdir(old):
+            fs.rename(old, live_dir)
+    if fs.isdir(live_dir) and fs.isdir(old):
+        fs.rmtree(old)
 
 
-def _swap_log_dir(live_dir: str) -> None:
+def _swap_log_dir(live_dir: str, fs=_LOCAL) -> None:
     """Promote ``live_dir + '.compact'`` (already fully written) to
-    ``live_dir`` via rename-rename-rmtree: the log is never deleted
-    before its replacement is complete on disk, and the only
+    ``live_dir`` via rename-rename-rmtree: the directory is never
+    deleted before its replacement is complete on disk, and the only
     no-live-dir window is between two renames — which
-    :func:`_recover_log_swap` closes on the next operation."""
+    :func:`_recover_log_swap` closes on the next write.  A missing
+    ``live_dir`` (a table's first write) is simply created.  ``fs`` is
+    the metadata filesystem seam (``muller_spark.fs``)."""
     old = live_dir + ".old"
-    shutil.rmtree(old, ignore_errors=True)  # stale from a prior crash
-    os.rename(live_dir, old)
-    os.rename(live_dir + ".compact", live_dir)
-    shutil.rmtree(old)
+    with contextlib.suppress(FileNotFoundError):
+        fs.rmtree(old)  # stale from a prior crash
+    if fs.isdir(live_dir):
+        fs.rename(live_dir, old)
+    fs.rename(live_dir + ".compact", live_dir)
+    with contextlib.suppress(FileNotFoundError):
+        fs.rmtree(old)
 
 
 def _writer_lease(path: str, lock):

@@ -3,10 +3,11 @@
 - Commits and merges record, relative to their first parent, whether
   row ids stayed stable and which tensors had cells edited
   (``Snapshot.extra``); ``update_index`` / ``update_vector_index`` route
-  on that record: noop, delta, reassign (vector indexes) or rebuild.
+  on that record: noop, delta or rebuild.
 - ``InvertedIndex.update`` appends the delta's posting and docstats
   files; a crash between the append and the manifest write heals on
-  the retry, and a crash inside a table swap heals on the next open.
+  the retry, and a crash inside a table swap heals on the next mutation
+  (or ``recover()``), never on a read.
 - Memoized posting reads re-open when another instance moved the
   manifest.
 - Cell edits are batched into one projection at flush.
@@ -14,6 +15,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import logging
 import os
 
@@ -64,8 +66,8 @@ FAMILIES = ["IVFFLAT", "IVFPQ", "DISKANN"]
 @pytest.mark.parametrize("index_type", FAMILIES)
 def test_vector_index_fresh_after_edit(spark, tmp_path, index_type):
     """An in-place edit moves row 5 into another cluster: the refresh
-    re-assigns it (ids stable, ``emb`` edited), so the prebuilt index
-    finds it at distance 0."""
+    rebuilds (ids stable, but ``emb`` edited), so the index finds it at
+    distance 0."""
     ds, centres, _ = _vector_ds(spark, str(tmp_path / "v"), index_type)
     target = centres[(5 % CLUSTERS) + 7]
     ds[5] = {"emb": [float(x) for x in target]}
@@ -115,7 +117,7 @@ def flat_ds(spark, tmp_path):
 @pytest.mark.parametrize("change,route", [
     ("none", "noop"),
     ("append", "delta"),
-    ("edit", "reassign"),
+    ("edit", "rebuild"),
     ("pop", "rebuild"),
 ])
 def test_refresh_route_is_logged(flat_ds, caplog, change, route):
@@ -313,13 +315,14 @@ def test_update_appends_files_and_keeps_postings(spark, tmp_path):
         for f in fs if f.endswith(".parquet")
     }
     idx.update(_docs(spark, 40, 60), commit_id="c2")
+    (segment,) = idx.manifest["segments"]
     after = {
         os.path.join(d, f) for d, _, fs in os.walk(os.path.join(path, "postings"))
         for f in fs if f.endswith(".parquet")
     }
     assert before < after  # nothing rewritten, only files added
     added = after - before
-    assert all(os.path.basename(f).startswith("delta-c2-") for f in added)
+    assert all(os.path.basename(f).startswith(f"delta-{segment}-") for f in added)
     assert len(added) <= idx.manifest["num_shards"]
     fresh = InvertedIndex.build(_docs(spark, 0, 60), "text", str(tmp_path / "f"),
                                 id_col="id", positions=True)
@@ -372,7 +375,7 @@ def test_crash_inside_a_swap_heals_on_next_open(spark, tmp_path, table):
     real_rename = idx.fs.rename
 
     def crash(src, dst):
-        if src.endswith(f"{table}_new"):
+        if src.endswith(f"{table}.compact"):
             raise RuntimeError("simulated crash between the two renames")
         real_rename(src, dst)
 
@@ -383,10 +386,51 @@ def test_crash_inside_a_swap_heals_on_next_open(spark, tmp_path, table):
         else:
             idx._write_docstats()
     assert not os.path.isdir(os.path.join(path, table))  # the crash window
-    healed = InvertedIndex(spark, path)
+    window = sorted(os.listdir(path))
+    with contextlib.suppress(Exception):
+        _scores(InvertedIndex(spark, path))
+    assert sorted(os.listdir(path)) == window  # a read renames nothing
+    healed = InvertedIndex(spark, path).recover()
     assert _scores(healed) == want
     assert healed._postings().count() == healed.manifest["n_postings"]
     assert sorted(d for d in os.listdir(path) if d.startswith(table)) == [table]
+
+
+@pytest.mark.parametrize("maintenance", ["optimize", "reshard"])
+def test_update_after_maintenance_keeps_appended_docstats(spark, tmp_path, maintenance):
+    """optimize / reshard rewrite only the postings: the docstats rows an
+    earlier update appended stay listed, so the next update keeps them
+    and BM25 still equals a fresh build."""
+    path = str(tmp_path / "idx")
+    idx = InvertedIndex.build(_docs(spark, 0, 30), "text", path, id_col="id",
+                              positions=True)
+    idx.update(_docs(spark, 30, 45), commit_id="c2")
+    if maintenance == "optimize":
+        idx.optimize()
+    else:
+        idx.reshard(3)
+    idx.update(_docs(spark, 45, 60), commit_id="c3")
+    fresh = InvertedIndex.build(_docs(spark, 0, 60), "text", str(tmp_path / "f"),
+                                id_col="id", positions=True)
+    idx = InvertedIndex(spark, path)
+    assert idx.manifest["n_postings"] == fresh.manifest["n_postings"]
+    assert idx._docstats().count() == 60
+    assert _scores(idx) == _scores(fresh)
+
+
+def test_updates_under_one_commit_id_keep_both_deltas(spark, tmp_path):
+    path = str(tmp_path / "idx")
+    idx = InvertedIndex.build(_docs(spark, 0, 20), "text", path, id_col="id",
+                              positions=True)
+    idx.update(_docs(spark, 20, 30), commit_id="c2")
+    idx.update(_docs(spark, 30, 40), commit_id="c2")
+    segments = idx.manifest["segments"]
+    assert len(segments) == len(set(segments)) == 2
+    fresh = InvertedIndex.build(_docs(spark, 0, 40), "text", str(tmp_path / "f"),
+                                id_col="id", positions=True)
+    assert idx.manifest["n_postings"] == fresh.manifest["n_postings"]
+    assert idx._postings().count() == fresh.manifest["n_postings"]
+    assert _scores(idx) == _scores(fresh)
 
 
 def test_memoized_reads_see_another_instances_append(spark, tmp_path):
